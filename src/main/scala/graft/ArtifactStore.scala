@@ -167,20 +167,6 @@ object ArtifactStore {
       sMod.toString(16) + "-" + n
   }
 
-  /** Peek without building: the published dir for (name, contentKey) if
-    * one exists — for consumers that can use an artifact another query
-    * built but whose own fallback is CHEAPER than building it (e.g. the
-    * win5 session memo adopting x24's stored windows).
-    */
-  def lookup(spark: SparkSession, name: String,
-      contentKey: String): Option[String] = {
-    val target = baseDir(spark).resolve(s"$name-$contentKey")
-    if (java.nio.file.Files.exists(target.resolve("_OK"))) {
-      requireOwned(target)
-      Some(target.toString)
-    } else None
-  }
-
   /** Content key for artifacts derived from a whole DIRECTORY of input
     * files (the brick: 14 adapters over one testdata dir): md5 over
     * the sorted (path, length, mtime) listing plus `recipe`. File

@@ -108,56 +108,28 @@ object Harmonize {
         if ((converter eq StructureConverter.Stub) &&
             graft.ArtifactStore.enabled(spark) &&
             graft.ArtifactStore.hostableInput(spark, sfDir)) {
+          // VERDICT r14 #2 / r15 #5: the brick's one stored layout is
+          // BUCKETED files (activities and substances bucketed+sorted
+          // on sid, properties on pid), written straight by the build —
+          // one write of the fact table — and read back as bucketed
+          // catalog tables, so every sid/pid-keyed aggregate or join
+          // over the brick starts from the key's partitioning and
+          // elides its fact-side exchange (the BucketedBrickProbe
+          // receipt, 3.5× at 156M rows). v2 of the recipe writes ONE
+          // file per bucket per slice (guide §6 small files: v1 left
+          // ~94 task-files per bucket). `spark.graft.assembly.slices`
+          // only changes how many adapter slices the build deals.
           val names = adapters.map(_.name).mkString(",")
-          val akey = graft.ArtifactStore.dirKey(spark, sfDir,
-            "brick-v1-" + names)
-          // VERDICT r14 #2: consumers read the brick through its
-          // BUCKETED catalog layout, not the plain parquet: activities
-          // and substances bucketed+sorted on sid, properties on pid —
-          // every sid/pid-keyed aggregate or join over the brick then
-          // starts from the join key's partitioning and elides its
-          // fact-side exchange (the BucketedBrickProbe receipt, 3.5× at
-          // 156M rows, now the production read path).
-          //
-          // VERDICT r15 #5 (cold-adoption bill): the bucketed layout is
-          // now the PRIMARY artifact — a fresh one-shot build assembles
-          // STRAIGHT to bucketed files (one write of the fact table,
-          // not build-then-rewrite); the plain "brick" artifact is only
-          // consumed when a machine already hosts one (it is a byte
-          // superset: bucketed files read fine as plain parquet, so
-          // nothing else needs the plain dir). The sliced build keeps
-          // the two-step — its bounded-scratch appends need the plain
-          // layout first. v2 of the layout recipe also writes ONE file
-          // per bucket (repartition on the bucket key before the write
-          // — guide §6 small files: the v1 rewrite left ~94 task-files
-          // per bucket, 3 000 tiny files per table, every session's
-          // cold read-back paying 3 000 opens).
           val buckets = spark.conf.getOption(BrickBucketsKey)
             .map(_.toInt).getOrElse(32)
           val bkey = graft.ArtifactStore.dirKey(spark, sfDir,
             s"brickb-v2-$buckets-" + names)
           val slices = spark.conf.getOption(SlicesKey)
             .map(_.trim.toInt).getOrElse(1)
-          def rewriteFrom(dir: String, tmp: String): Unit = {
-            def rd0(n: String) = spark.read.parquet(s"$dir/$n")
-            graft.sources.Catalog.writeBrickBucketedFiles(spark,
-              Brick(rd0("substances"), rd0("properties"),
-                rd0("activities")), tmp, buckets)
-          }
           val bdir = graft.ArtifactStore.ensure(spark, "brickb", bkey) {
             tmp =>
-              graft.ArtifactStore.lookup(spark, "brick", akey) match {
-                case Some(dir) => rewriteFrom(dir, tmp) // already hosted
-                case None if slices > 1 =>
-                  val dir = graft.ArtifactStore.ensure(spark, "brick",
-                    akey) { t2 =>
-                    buildBrickTo(spark, sfDir, adapters, converter, t2)
-                  }
-                  rewriteFrom(dir, tmp)
-                case None =>
-                  buildBrickBucketedTo(spark, sfDir, adapters, converter,
-                    tmp, buckets)
-              }
+              buildBrickBucketedTo(spark, sfDir,
+                sliceAdapters(adapters, slices), converter, tmp, buckets)
           }
           val b = graft.sources.Catalog.registerBrickBucketedFiles(
             spark, bdir, buckets)
@@ -282,7 +254,9 @@ object Harmonize {
         .min(BigInt(Long.MaxValue)).toLong
     }.foldLeft(0L)((a, b) => if (a + b < a) Long.MaxValue else a + b)
 
-  /** The checkpointed in-memory assembly — cachedBrick's build step.
+  /** The checkpointed in-memory assembly — cachedBrick's session-local
+    * route (store disabled, input over the hosting size gate, or a
+    * custom converter); hosted bricks go through [[buildBrickBucketedTo]].
     *
     * Shared-scan assembly: the canonicalize+md5 staging unions are
     * each consumed twice (substances + sidMap, properties + pidMap,
@@ -314,79 +288,16 @@ object Harmonize {
     } finally inter.foreach(graft.MemoRegistry.release)
   }
 
-  /** The assembly with the three FINAL tables streamed straight to
-    * their parquet sink — ONE materialization per table, not two
-    * (VERDICT r11 #2). `buildBrick` checkpoints each final table so
-    * in-session consumers can re-read it; when the destination is a
-    * durable parquet dir (the cross-session ArtifactStore brick), that
-    * checkpoint is a redundant second full write+read of the fact
-    * table — at the sf10-stretch the activities handoff alone is tens
-    * of GB, and the checkpoint copy is exactly the scratch-disk
-    * spender that kept the fourth-decade assembly from completing.
-    * Only the staging unions (each consumed twice: table + id map, or
-    * re-key chain + inchi scan) are materialized; each final-table
-    * write job projects them once and lands directly in `dir`.
-    *
-    * With `spark.graft.assembly.slices` > 1 the build runs SLICED
-    * (see [[buildBrickToSliced]]) — same rows, bounded peak scratch.
-    */
-  private def buildBrickTo(spark: SparkSession, sfDir: String,
-      adapters: Seq[SourceAdapter], converter: StructureConverter,
-      dir: String): Unit = {
-    val k = spark.conf.getOption(SlicesKey).map(_.trim.toInt).getOrElse(1)
-    if (k > 1)
-      buildBrickToSliced(spark, sfDir, sliceAdapters(adapters, k),
-        converter, dir)
-    else {
-    val inter = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val staged = stageAll(spark, sfDir, adapters)
-    // finally: this path exists for the near-disk-full scenario — if a
-    // final-table write dies (ENOSPC), the staging checkpoints must not
-    // stay resident and starve the retry (ADVICE r12)
-    try withScaledInitialPartitions(spark, stagedBytes(staged)) {
-      val b = brickFromStaged(staged, converter,
-        materialize = { df =>
-          val c = graft.MemoRegistry.checkpointLarge(df); inter += c; c })
-      b.substances.write.parquet(s"$dir/substances")
-      b.properties.write.parquet(s"$dir/properties")
-      b.activities.write.parquet(s"$dir/activities")
-    } finally inter.foreach(graft.MemoRegistry.release)
-    }
-  }
-
-  /** The one-shot assembly streamed STRAIGHT to its bucketed layout
-    * (VERDICT r15 #5): same staging/materialization discipline as
-    * [[buildBrickTo]], but the three final tables land as bucketed
-    * files in one write each — the fact table crosses the disk once
-    * instead of plain-write + read-back + bucketed-rewrite. The
-    * bucketing exchange this adds per table replaces the rewrite's own
-    * exchange, not the assembly's (the collapse output is partitioned
-    * on inchi, never on sid, so SOME exchange into the layout always
-    * existed on the write path).
-    */
-  private def buildBrickBucketedTo(spark: SparkSession, sfDir: String,
-      adapters: Seq[SourceAdapter], converter: StructureConverter,
-      dir: String, buckets: Int): Unit = {
-    val inter = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val staged = stageAll(spark, sfDir, adapters)
-    try withScaledInitialPartitions(spark, stagedBytes(staged)) {
-      val b = brickFromStaged(staged, converter,
-        materialize = { df =>
-          val c = graft.MemoRegistry.checkpointLarge(df); inter += c; c })
-      graft.sources.Catalog.writeBrickBucketedFiles(spark, b, dir, buckets)
-    } finally inter.foreach(graft.MemoRegistry.release)
-  }
-
-  /** Conf: adapter-slice count for the artifact-dir brick build.
-    * Default 1 — the one-shot shape above; every gate-scale plan is
-    * unchanged unless a deployment opts in.
+  /** Conf: adapter-slice count for the hosted brick build
+    * ([[buildBrickBucketedTo]]). Default 1 — the one-shot build; every
+    * gate-scale plan is unchanged unless a deployment opts in.
     */
   val SlicesKey = "spark.graft.assembly.slices"
 
   /** Conf: bucket count for the hosted brick's catalog layout. Default
     * 32 (= the local core count, so gate-scale scans keep full
     * parallelism); a cluster sizes it so each bucket's activities
-    * slice fits an executor — the writeBrickBucketed guidance.
+    * slice fits an executor — the writeBrickBucketedFiles guidance.
     */
   val BrickBucketsKey = "spark.graft.brick.buckets"
 
@@ -401,21 +312,32 @@ object Harmonize {
       adapters.zipWithIndex.collect { case (a, j) if j % n == i => a })
   }
 
-  /** Bounded-scratch SLICED assembly (VERDICT r14 #1): build the brick
-    * one adapter-slice at a time, appending each slice's three tables
-    * into `dir` and reclaiming the slice's staged handoffs and shuffle
-    * files before the next slice stages. Peak concurrent scratch drops
-    * from sum-over-all-sources (staged handoffs + the whole union's
-    * precollapse shuffle live at once — the ~135 GB that ended the
-    * fifth-decade one-shot probe in a kernel OOM, BENCH_LOCAL r14) to
-    * max-over-slices(slice staged + slice shuffle) + the growing
-    * output dir, which is the final product, not scratch. This is the
-    * cluster posture when executor-local disk is the constraint:
-    * total work is unchanged, only CONCURRENCY of scratch is bounded.
+  /** The one function that writes a brick dir: assemble the brick
+    * from `slices` (disjoint adapter sets, see [[sliceAdapters]]) and
+    * stream each slice's three final tables straight into the bucketed
+    * layout under `dir` ([[graft.sources.Catalog.writeBrickBucketedFiles]]).
+    * Only the staging unions (each consumed twice: table + id map, or
+    * re-key chain + inchi scan) are materialized; each final-table
+    * write projects them once, so the fact table crosses the disk once
+    * — no checkpoint copy (VERDICT r11 #2: at the sf10 stretch that
+    * copy was the scratch spender that kept the assembly from
+    * completing). The bucketing exchange per table replaces no
+    * assembly exchange: the collapse output is partitioned on inchi,
+    * never on sid.
     *
-    * Output is BIT-IDENTICAL to the one-shot build (HarmonizeSpec pins
-    * it) because the brick is per-SOURCE decomposable and slices are
-    * whole-adapter partitions:
+    * The one-shot build is the ONE-slice case. More slices bound peak
+    * scratch (VERDICT r14 #1): the brick is built one adapter-slice at
+    * a time, and between slices the staged handoffs and shuffle files
+    * are reclaimed. Peak concurrent scratch drops from the sum over all
+    * sources (staged handoffs + the whole union's precollapse shuffle —
+    * the ~135 GB that ended the fifth-decade one-shot probe in a kernel
+    * OOM, BENCH_LOCAL r14) to the max over slices, plus the growing
+    * output dir, which is the product, not scratch. Total work is
+    * unchanged; only the CONCURRENCY of scratch is bounded.
+    *
+    * The slices' appended union is BIT-IDENTICAL to the one-shot brick
+    * (HarmonizeSpec pins it) because the brick is per-SOURCE
+    * decomposable and slices are whole-adapter partitions:
     *   - substances/properties rows carry `source` and their distinct
     *     keys include it, so per-slice distinct ∪ per-slice distinct
     *     IS the global distinct — no group crosses slices;
@@ -429,54 +351,60 @@ object Harmonize {
     *     source and therefore must re-collapse;
     *   - smiles = converter(inchi) is a pure function: a structure
     *     shared by two slices converts once per slice to the same
-    *     value (the per-slice distinct-inchi map only bounds converter
-    *     CALLS, never changes results).
+    *     value.
     *
-    * Scratch lifecycle per slice: stage (handoff S) → materialize the
-    * three staging unions (checkpoints U; peak S+U) → EVICT the staged
-    * handoffs (they are dead once the unions exist — the one-shot path
-    * can't do this because h-family consumers share the session memo;
-    * here eviction is the point of the mode and the memo rebuilds
-    * bit-identically if later queries re-stage) → write the three
-    * tables (join/collapse shuffles W; peak U+W) → release U, drop the
-    * slice lineage, GC so ContextCleaner reclaims W. Per-slice
-    * first-shot reducer width scales with the SLICE's staged bytes —
-    * partitions track data, as everywhere else.
+    * Scratch lifecycle of a multi-slice build, per slice: stage
+    * (handoff S) → materialize the three staging unions (checkpoints
+    * U; peak S+U) → EVICT the staged handoffs (dead once the unions
+    * exist; the memo rebuilds them bit-identically if later queries
+    * re-stage — a one-slice build keeps them, because h-family
+    * consumers share the session memo) → append the three tables
+    * (join/collapse shuffles W; peak U+W) → release U, GC so
+    * ContextCleaner reclaims W. Each slice's first-shot reducer width
+    * scales with ITS staged bytes. `instrument` receives one line per
+    * finished slice (SlicedAssemblyProbe's per-slice receipts).
     */
-  def buildBrickToSliced(spark: SparkSession, sfDir: String,
+  def buildBrickBucketedTo(spark: SparkSession, sfDir: String,
       slices: Seq[Seq[SourceAdapter]], converter: StructureConverter,
-      dir: String, instrument: String => Unit = _ => ()): Unit = {
+      dir: String, buckets: Int,
+      instrument: String => Unit = _ => ()): Unit = {
     require(slices.nonEmpty && slices.forall(_.nonEmpty),
-      "sliced assembly needs at least one non-empty adapter slice")
+      "brick assembly needs at least one non-empty adapter slice")
     val names = slices.flatten.map(_.name)
     require(names.distinct.size == names.size,
       s"adapter slices must be disjoint (source is the decomposition " +
         s"key): ${names.mkString(",")}")
-    slices.zipWithIndex.foreach { case (sl, i) =>
-      val t0 = System.nanoTime()
-      val inter = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      try {
-        val staged = stageAll(spark, sfDir, sl)
-        withScaledInitialPartitions(spark, stagedBytes(staged)) {
-          val b = brickFromStaged(staged, converter,
-            materialize = { df =>
-              val c = graft.MemoRegistry.checkpointLarge(df); inter += c; c })
-          // brickFromStaged materialized the three staging unions
-          // eagerly — the per-adapter handoffs are dead NOW, before
-          // the join/collapse shuffles build their own mass
-          SourceAdapter.evict(spark)
-          reclaimShuffles(spark)
-          b.substances.write.mode("append").parquet(s"$dir/substances")
-          b.properties.write.mode("append").parquet(s"$dir/properties")
-          b.activities.write.mode("append").parquet(s"$dir/activities")
+    val sliced = slices.size > 1
+    graft.sources.Catalog.writeBrickBucketedFiles(spark, dir, buckets) {
+      append =>
+        slices.zipWithIndex.foreach { case (sl, i) =>
+          val t0 = System.nanoTime()
+          val inter = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+          // finally: if a write dies (ENOSPC), the staging-union
+          // checkpoints must not stay resident and starve the retry
+          // (ADVICE r12)
+          try {
+            val staged = stageAll(spark, sfDir, sl)
+            withScaledInitialPartitions(spark, stagedBytes(staged)) {
+              val b = brickFromStaged(staged, converter,
+                materialize = { df =>
+                  val c = graft.MemoRegistry.checkpointLarge(df)
+                  inter += c; c
+                })
+              if (sliced) {
+                SourceAdapter.evict(spark)
+                reclaimShuffles(spark)
+              }
+              append(b)
+            }
+          } finally {
+            inter.foreach(graft.MemoRegistry.release)
+            if (sliced) reclaimShuffles(spark)
+          }
+          instrument(f"slice ${i + 1}/${slices.size} " +
+            f"[${sl.map(_.name).mkString(",")}] " +
+            f"${(System.nanoTime() - t0) / 1e9}%.1fs")
         }
-      } finally {
-        inter.foreach(graft.MemoRegistry.release)
-        reclaimShuffles(spark)
-      }
-      instrument(f"slice ${i + 1}/${slices.size} " +
-        f"[${sl.map(_.name).mkString(",")}] " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
   }
 
@@ -704,7 +632,7 @@ object Harmonize {
 
   /** [[merge]] specialized to units that are whole-SOURCE partitions —
     * the sliced assembly's decomposability argument (see
-    * [[buildBrickToSliced]]) applied to the incremental path. When the
+    * [[buildBrickBucketedTo]]) applied to the incremental path. When the
     * two bricks' source sets are DISJOINT, every distinct/collapse key
     * contains `source` (substances/properties rows carry it; the
     * activities collapse key is (aid, sid, pid, source, …)), so no

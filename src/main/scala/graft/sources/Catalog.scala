@@ -5,7 +5,7 @@ import graft.Tables
 import graft.harmonize.Harmonize
 
 /** Catalog surface: the testdata tables and the brick as named SQL
-  * relations, three ways —
+  * relations —
   *
   *   - `registerViews`: session temp views (the lightweight path the
   *     q2/q6-q9 SQL queries use ad hoc, centralized);
@@ -14,7 +14,10 @@ import graft.harmonize.Harmonize
   *     the tables carry row/size statistics — this is what unlocks
   *     cost-based join planning (CBO reorder, stats-driven broadcast
   *     decisions) for pure-SQL users, on top of AQE's runtime stats;
-  *   - `registerBrick`: the harmonized tables as views.
+  *   - `registerBrick`: the harmonized tables as views;
+  *   - `writeBrickBucketedFiles` / `registerBrickBucketedFiles`: the
+  *     brick's one stored layout — bucketed files in a dir, written by
+  *     the build and adopted as bucketed catalog tables by any session.
   *
   * The reference has no catalog (paths wired through DVC stage args);
   * a queryable engine needs one (CatalogSpec).
@@ -59,76 +62,56 @@ object Catalog {
     brick.activities.createOrReplaceTempView("activities")
   }
 
-  /** Materialize the brick as BUCKETED catalog tables — the layout a
-    * long-lived brick deployment wants at scale: activities and
-    * substances co-bucketed (and sorted) on sid, properties on pid, so
-    * every downstream sid/pid join or aggregation starts from the
-    * join key's partitioning and elides its exchange entirely. The
-    * bucket count is the knob to size so each bucket's biggest table
-    * slice fits an executor (at 17 GB reference scale, hundreds; here
-    * 8). BrickLayoutSpec asserts the exchange elision on the written
-    * tables.
-    */
-  def writeBrickBucketed(spark: SparkSession, brick: Harmonize.Brick,
-      path: String, db: String = "graft", buckets: Int = 8): Unit = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    def save(df: org.apache.spark.sql.DataFrame, name: String,
-        key: String): Unit =
-      df.write.mode("overwrite")
-        .bucketBy(buckets, key).sortBy(key)
-        .option("path", s"$path/$name").saveAsTable(s"$db.$name")
-    save(brick.substances, "substances_b", "sid")
-    save(brick.properties, "properties_b", "pid")
-    save(brick.activities, "activities_b", "sid")
-  }
-
-  /** The consume path of the write-once artifact: a Brick whose three
-    * tables are the BUCKETED catalog relations, so a fresh session (or
-    * a downstream job that never ran harmonize) gets the exchange-free
-    * sid/pid join layout straight from storage — no staging, no
-    * assembly, no memo. This plus `writeBrickBucketed` is the 100 TB
-    * brick lifecycle: one job builds and buckets; every consumer reads
-    * the layout (BrickLayoutSpec proves read-back equality and that
-    * the bucketing survives the round-trip).
-    */
-  def readBrickBucketed(spark: SparkSession,
-      db: String = "graft"): Harmonize.Brick =
-    Harmonize.Brick(
-      spark.table(s"$db.substances_b"),
-      spark.table(s"$db.properties_b"),
-      spark.table(s"$db.activities_b"))
-
   /** Write the brick as BUCKETED FILES under `dir`, keeping no catalog
-    * state (VERDICT r14 #2 — the ArtifactStore layout step). Spark's
-    * only bucketed-file writer is saveAsTable, so each table goes
-    * through a throwaway external catalog entry whose path is the
-    * target subdir and which is dropped right after — the files, with
-    * bucket ids encoded in their names, remain. Any session can later
-    * adopt them with [[registerBrickBucketedFiles]]; the file layout is
-    * also a superset of the plain artifact (spark.read.parquet ignores
-    * bucket names), so non-catalog readers keep working.
+    * state once it returns — the brick's one artifact layout:
+    * activities and substances bucketed and sorted on sid, properties
+    * on pid, so every sid/pid join or aggregation over the brick starts
+    * from its key's partitioning and elides its exchange. Size the
+    * bucket count so each bucket's activities slice fits an executor.
+    *
+    * `body` receives an `append` that writes one brick's three tables
+    * into the bucket dirs; a sliced build calls it once per slice.
+    * Spark's only bucketed-file writer is saveAsTable, so each target
+    * gets ONE throwaway external table for the whole build: created on
+    * the first append, appended to on later ones, dropped in a finally
+    * (the files, bucket ids in their names, remain). The table must be
+    * kept: a saveAsTable under a NEW name onto a non-empty path replaces
+    * the files already there, even in append mode. Each append writes
+    * at most one file per bucket, so a k-slice build leaves at most k
+    * files per bucket; Spark ignores SORTED BY on read by default
+    * (`spark.sql.legacy.bucketedTableScan.outputOrdering`), so the
+    * extra files cost only file opens. Any session adopts the files
+    * with [[registerBrickBucketedFiles]]; `spark.read.parquet` also
+    * reads them as plain parquet.
     */
-  def writeBrickBucketedFiles(spark: SparkSession, brick: Harmonize.Brick,
-      dir: String, buckets: Int): Unit = {
-    def save(df: org.apache.spark.sql.DataFrame, name: String,
-        key: String): Unit = {
-      val t = "graft_tmp_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      // repartition on the bucket key FIRST: repartition's
-      // HashPartitioning and the bucket-file assignment use the same
-      // murmur3 pmod, so each write task holds exactly one bucket and
-      // emits exactly one file — without it every scan task writes its
-      // own file per bucket (~94 files/bucket at sf0.1, 3 000 tiny
-      // files per table; guide §6), and multi-file buckets also void
-      // the SORTED BY metadata for readers.
-      df.repartition(buckets, org.apache.spark.sql.functions.col(key))
-        .write.mode("overwrite").bucketBy(buckets, key).sortBy(key)
-        .option("path", s"$dir/$name").saveAsTable(t)
-      spark.sql(s"DROP TABLE $t")
+  def writeBrickBucketedFiles(spark: SparkSession, dir: String,
+      buckets: Int)(body: (Harmonize.Brick => Unit) => Unit): Unit = {
+    val targets = Seq("substances" -> "sid", "properties" -> "pid",
+      "activities" -> "sid").map { case (name, key) =>
+      (name, key,
+        "graft_tmp_" + java.util.UUID.randomUUID().toString.replace("-", ""))
     }
-    save(brick.substances, "substances", "sid")
-    save(brick.properties, "properties", "pid")
-    save(brick.activities, "activities", "sid")
+    var created = false
+    def append(b: Harmonize.Brick): Unit = {
+      Seq(b.substances, b.properties, b.activities).zip(targets).foreach {
+        case (df, (name, key, t)) =>
+          // repartition on the bucket key FIRST: repartition's
+          // HashPartitioning and the bucket-file assignment use the
+          // same murmur3 pmod, so each write task holds exactly one
+          // bucket and emits exactly one file — without it every scan
+          // task writes its own file per bucket (~94 files/bucket at
+          // sf0.1, 3 000 tiny files per table; guide §6)
+          df.repartition(buckets, org.apache.spark.sql.functions.col(key))
+            .write.mode(if (created) "append" else "overwrite")
+            .bucketBy(buckets, key).sortBy(key)
+            .option("path", s"$dir/$name").saveAsTable(t)
+      }
+      created = true
+    }
+    try body(append)
+    finally targets.foreach { case (_, _, t) =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
   }
 
   /** Adopt bucketed brick FILES (written by

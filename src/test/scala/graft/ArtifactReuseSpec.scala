@@ -35,7 +35,10 @@ class ArtifactReuseSpec extends SparkSpec {
       val t1 = sortedRows(
         SourceAdapter.cachedStaging(EventsAdapter, spark, sf()).activities)
       val dirs1 = artifactDirs(base)
-      assert(dirs1.exists(_.startsWith("brick-")))
+      // the bucketed layout (`brickb-`) is the brick's only artifact:
+      // no plain `brick-` dir is published beside it
+      assert(dirs1.exists(_.startsWith("brickb-")), dirs1)
+      assert(!dirs1.exists(_.startsWith("brick-")), dirs1)
       assert(dirs1.exists(_.startsWith("staging-events-")))
 
       // forget every session memo; the next access must ADOPT the

@@ -6,8 +6,9 @@ import graft.harmonize.{DataQuality, Harmonize}
 import graft.sources.{Catalog, SourceAdapter}
 
 /** The bucketed brick layout over the full EIGHT-source brick: written
-  * once via Catalog.writeBrickBucketed, read back via readBrickBucketed,
-  * downstream sid-joins run with zero shuffle exchange.
+  * once via Catalog.writeBrickBucketedFiles, adopted via
+  * registerBrickBucketedFiles, downstream sid-joins run with zero
+  * shuffle exchange.
   */
 class BrickLayoutSpec extends SparkSpec {
 
@@ -17,8 +18,10 @@ class BrickLayoutSpec extends SparkSpec {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      Catalog.writeBrickBucketed(spark, brick, path, db = "graft_t")
-      val back = Catalog.readBrickBucketed(spark, db = "graft_t")
+      Catalog.writeBrickBucketedFiles(spark, path, 8) { append =>
+        append(brick)
+      }
+      val back = Catalog.registerBrickBucketedFiles(spark, path, 8)
 
       // read-back equality: the artifact IS the brick (row-level, not
       // just counts — content-hash ids make except() exact)
@@ -48,9 +51,7 @@ class BrickLayoutSpec extends SparkSpec {
         "bucketed groupBy(sid) should be exchange-free")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      Seq("activities_b", "substances_b", "properties_b").foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS graft_t.$t"))
-      spark.sql("DROP DATABASE IF EXISTS graft_t")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     }
   }
 
@@ -80,8 +81,8 @@ class BrickLayoutSpec extends SparkSpec {
     assert(!h3plan.matches(
       "(?s).*Exchange hashpartitioning\\([^)]*\\baid\\b.*"), h3plan)
 
-    // the two-rewrite pathway (assembly -> plain artifact -> bucketed
-    // layout) loses nothing: row-identical to the declarative build
+    // the hosted pathway (assembly -> bucketed files -> catalog
+    // registration) loses nothing: row-identical to the declarative build
     val plain = Harmonize.brick(spark, sf(), SourceAdapter.all)
     assert(brick.activities.exceptAll(plain.activities).isEmpty &&
       plain.activities.exceptAll(brick.activities).isEmpty)

@@ -8,12 +8,13 @@ import graft.sources.{Catalog, SourceAdapter}
   * scale — BrickLayoutSpec proves exchange-free downstream sid work at
   * gate scale; this probe does it on the fourth-decade artifact
   * (156.1M activities). One job assembles and writes the brick with
-  * `Catalog.writeBrickBucketed`; the consumer half then runs the
-  * h3-shaped QC aggregate and the sid fact-dimension join off the
-  * CATALOG tables and (a) dumps whether any `Exchange
-  * hashpartitioning` remains in the executed plans, (b) times the same
-  * work against the identical parquet bytes read WITHOUT bucket
-  * metadata (`spark.read.parquet` on the same files) — so the receipt
+  * `Catalog.writeBrickBucketedFiles`; the consumer half adopts the
+  * files with `registerBrickBucketedFiles`, runs the h3-shaped QC
+  * aggregate and the sid fact-dimension join off those CATALOG tables
+  * and (a) dumps whether any `Exchange hashpartitioning` remains in the
+  * executed plans, (b) times the same work against the identical
+  * parquet bytes read WITHOUT bucket metadata (`spark.read.parquet` on
+  * the same files) — so the receipt
   * isolates exactly what the layout buys: the exchanges, not the I/O.
   *
   * `sbt "Test/runMain graft.BucketedBrickProbe [sfDir] [buckets]"`
@@ -64,9 +65,10 @@ object BucketedBrickProbe {
 
     val path = s"/root/repo/target/brick-bucketed-probe"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    time(s"writeBrickBucketed($buckets)") {
-      Catalog.writeBrickBucketed(spark, brick, path, db = "graft_p",
-        buckets = buckets)
+    time(s"writeBrickBucketedFiles($buckets)") {
+      Catalog.writeBrickBucketedFiles(spark, path, buckets) { append =>
+        append(brick)
+      }
     }
     Seq(brick.substances, brick.properties, brick.activities)
       .foreach(MemoRegistry.release)
@@ -75,9 +77,9 @@ object BucketedBrickProbe {
     // parquet. Broadcast off so the join layout, not the dim size,
     // decides the plan — the h3 QC shapes are fact-side aggregations.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val back = Catalog.readBrickBucketed(spark, db = "graft_p")
-    val plainActs = spark.read.parquet(s"$path/activities_b")
-    val plainSubs = spark.read.parquet(s"$path/substances_b")
+    val back = Catalog.registerBrickBucketedFiles(spark, path, buckets)
+    val plainActs = spark.read.parquet(s"$path/activities")
+    val plainSubs = spark.read.parquet(s"$path/substances")
 
     def qc(acts: org.apache.spark.sql.DataFrame) = acts
       .groupBy(col("sid"))
@@ -107,11 +109,8 @@ object BucketedBrickProbe {
     println("[bprobe] bucketed qc-agg plan:")
     println(qc(back.activities).queryExecution.executedPlan.toString
       .linesIterator.take(25).mkString("\n"))
-    Seq("activities_b", "substances_b", "properties_b").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_p.$t"))
-    spark.sql("DROP DATABASE IF EXISTS graft_p")
-    // external tables: dropping metadata leaves the files — reclaim
-    // the multi-GB probe artifact from the shared scratch disk
+    // external tables: the files outlive the session — reclaim the
+    // multi-GB probe artifact from the shared scratch disk
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path)): Unit
     spark.stop()
   }

@@ -211,63 +211,88 @@ class HarmonizeSpec extends SparkSpec {
   }
 
   test("sliced assembly is bit-identical to the one-shot brick (VERDICT r14 #1)") {
-    import graft.sources.{BindingdbAdapter, DocumentsAdapter, IceAdapter}
+    import graft.sources.{BindingdbAdapter, Catalog, DocumentsAdapter,
+      IceAdapter}
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
     // bindingdb: multi-measurement groups exercise the per-slice
     // collapse; a 3-slice deal over 5 adapters covers a two-adapter
     // slice and single-adapter slices in one run
     val adapters = Seq(EventsAdapter, OrdersAdapter, DocumentsAdapter,
       BindingdbAdapter, IceAdapter)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-sliced-brick").toString
-    spark.conf.set(Harmonize.ReclaimMsKey, "0")
-    try {
-      val slices = Harmonize.sliceAdapters(adapters, 3)
-      assert(slices.size == 3 && slices.flatten.toSet == adapters.toSet)
-      Harmonize.buildBrickToSliced(spark, sf(), slices,
-        graft.chem.StructureConverter.Stub, dir)
-      val one = Harmonize.brick(spark, sf(), adapters)
-      def same(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame): Unit =
-        assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
-      same(spark.read.parquet(s"$dir/substances"), one.substances)
-      same(spark.read.parquet(s"$dir/properties"), one.properties)
-      val acts = spark.read.parquet(s"$dir/activities")
-      same(acts, one.activities)
+    // first forced after the direct sliced build below, which evicts
+    // the session's staging memos
+    lazy val one = Harmonize.brick(spark, sf(), adapters)
+    def same(a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame): Unit = {
+      // the count catches a slice that silently replaced an earlier
+      // slice's files instead of appending to them
+      assert(a.count() == b.count())
+      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+    }
+    // a k-slice build read back through its bucketed catalog tables
+    def check(dir: String, k: Int, b: Harmonize.Brick): Unit = {
+      same(b.substances, one.substances)
+      same(b.properties, one.properties)
+      same(b.activities, one.activities)
       // the appended union arrives FULLY collapsed — source is in the
       // collapse key, so no group crosses slices and no re-collapse is
-      // needed (the decomposability argument buildBrickToSliced states)
-      assert(acts.groupBy("aid", "source").count()
+      // needed (the decomposability argument buildBrickBucketedTo
+      // states)
+      assert(b.activities.groupBy("aid", "source").count()
         .filter(col("count") > 1).count() == 0)
+      // each slice appends at most one file per bucket
+      val ids = new java.io.File(s"$dir/activities").listFiles().toSeq
+        .map(_.getName).filter(_.endsWith(".parquet"))
+        .map(BucketingUtils.getBucketId)
+      assert(ids.nonEmpty && ids.forall(_.isDefined), ids)
+      val filesPerBucket = ids.flatten.groupBy(identity).values.map(_.size)
+      assert(filesPerBucket.forall(_ <= k), filesPerBucket)
+      // multi-file buckets keep the layout: groupBy(sid) plans no
+      // exchange
+      val agg = b.activities.groupBy(col("sid")).agg(count(lit(1)))
+      val plan = agg.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange hashpartitioning"), plan)
+    }
+    def rmDir(dir: String): Unit = org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(dir))
+    spark.conf.set(Harmonize.ReclaimMsKey, "0")
+    try {
       // slicing degenerates gracefully: k past the adapter count
       // clamps to one-adapter slices, k<=1 to a single slice
       assert(Harmonize.sliceAdapters(adapters, 99).size == adapters.size)
       assert(Harmonize.sliceAdapters(adapters, 0) == Seq(adapters))
-      // the CONF-GATED route: spark.graft.assembly.slices > 1 makes the
-      // ARTIFACT build (cachedBrick -> buildBrickTo) run sliced; rows
-      // must equal the one-shot brick through the full hosted pathway
-      // (plain artifact -> bucketed layout -> catalog registration)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-sliced-store").toString
-      spark.conf.set(graft.ArtifactStore.DirKey, base)
-      spark.conf.set(Harmonize.SlicesKey, "2")
+      val slices = Harmonize.sliceAdapters(adapters, 3)
+      assert(slices.size == 3 && slices.flatten.toSet == adapters.toSet)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sliced-brick").toString
       try {
-        graft.MemoRegistry.evictAll(spark)
-        val hosted = Harmonize.cachedBrick(spark, sf(), adapters)
-        same(hosted.activities, one.activities)
-        same(hosted.substances, one.substances)
-        same(hosted.properties, one.properties)
-      } finally {
-        spark.conf.unset(Harmonize.SlicesKey)
-        spark.conf.unset(graft.ArtifactStore.DirKey)
-        graft.MemoRegistry.evictAll(spark)
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(base))
+        Harmonize.buildBrickBucketedTo(spark, sf(), slices,
+          graft.chem.StructureConverter.Stub, dir, 4)
+        check(dir, 3, Catalog.registerBrickBucketedFiles(spark, dir, 4))
+      } finally rmDir(dir)
+      // the CONF-GATED route: spark.graft.assembly.slices > 1 makes the
+      // hosted build (cachedBrick -> buildBrickBucketedTo) run sliced
+      // and publish the bucketed layout as the brick's only artifact
+      Seq(2, 3).foreach { k =>
+        val base = java.nio.file.Files
+          .createTempDirectory("graft-sliced-store").toString
+        spark.conf.set(graft.ArtifactStore.DirKey, base)
+        spark.conf.set(Harmonize.SlicesKey, k.toString)
+        try {
+          graft.MemoRegistry.evictAll(spark)
+          val hosted = Harmonize.cachedBrick(spark, sf(), adapters)
+          val bricks = new java.io.File(base).list().toSeq
+            .filter(_.startsWith("brick"))
+          assert(bricks.size == 1 && bricks.head.startsWith("brickb-"),
+            bricks)
+          check(s"$base/${bricks.head}", k, hosted)
+        } finally {
+          spark.conf.unset(Harmonize.SlicesKey)
+          spark.conf.unset(graft.ArtifactStore.DirKey)
+          graft.MemoRegistry.evictAll(spark)
+          rmDir(base)
+        }
       }
-    } finally {
-      spark.conf.unset(Harmonize.ReclaimMsKey)
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true): Unit
-    }
+    } finally spark.conf.unset(Harmonize.ReclaimMsKey)
   }
 }

@@ -8,13 +8,15 @@ import graft.sources.SourceAdapter
   * CONCURRENT scratch (~135 GB of staged handoffs + precollapse shuffle
   * live at once against 65 GB of disk + tmpfs that competes with the
   * heap for RAM — BENCH_LOCAL r14); this probe runs the same assembly
-  * through `Harmonize.buildBrickToSliced`, which stages → materializes
-  * → evicts one adapter-slice at a time, and reports per-slice wall /
-  * spill / shuffle-write / scratch free-space so the bounded-peak claim
-  * is measured, not argued.
+  * through `Harmonize.buildBrickBucketedTo` with k slices, which stages
+  * → materializes → evicts one adapter-slice at a time and appends each
+  * slice to the bucketed brick layout in outDir, and reports per-slice
+  * wall / spill / shuffle-write / scratch free-space so the bounded-peak
+  * claim is measured, not argued.
   *
-  * `sbt "Test/runMain graft.SlicedAssemblyProbe [sfDir] [k] [outDir]"`
-  * — k defaults to one adapter per slice (the minimal-peak extreme);
+  * `sbt "Test/runMain graft.SlicedAssemblyProbe [sfDir] [k] [outDir]
+  * [buckets]"` — k defaults to one adapter per slice (the minimal-peak
+  * extreme), buckets to 32 (the hosted brick's default);
   * same env posture as AssemblyProfile: SPARK_GRAFT_CKPT_MODE=reliable,
   * SPARK_GRAFT_CKPT_DIR=<comma list>, SPARK_DRIVER_MEM, and
   * SPARK_LOCAL_DIRS weighting shuffle onto /dev/shm.
@@ -24,6 +26,7 @@ object SlicedAssemblyProbe {
     val d = args.headOption.getOrElse("/root/repo/target/sf30-stretch")
     val k = args.lift(1).map(_.toInt).getOrElse(SourceAdapter.all.size)
     val out = args.lift(2).getOrElse("/root/repo/target/sliced-brick")
+    val buckets = args.lift(3).map(_.toInt).getOrElse(32)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus, "sliced-assembly-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -82,8 +85,8 @@ object SlicedAssemblyProbe {
     var lastSpill = 0L
     var lastShufW = 0L
     val t0 = System.nanoTime()
-    Harmonize.buildBrickToSliced(spark, d, slices,
-      graft.chem.StructureConverter.Stub, out,
+    Harmonize.buildBrickBucketedTo(spark, d, slices,
+      graft.chem.StructureConverter.Stub, out, buckets,
       instrument = { msg =>
         org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
         println(f"[sliced] $msg  spill=${(spill - lastSpill) / 1e6}%9.1fMB " +

@@ -5,7 +5,9 @@ import graft.harmonize.{DataQuality, Harmonize}
 import graft.sources.SourceAdapter
 
 /** Dev tool: independent correctness receipts over a SLICED-assembled
-  * brick dir (SlicedAssemblyProbe's output) — the reference's own
+  * brick dir (SlicedAssemblyProbe's output: the bucketed layout that
+  * `Harmonize.buildBrickBucketedTo` writes, read here as plain parquet,
+  * without the bucket metadata) — the reference's own
   * 10-check QC suite plus per-source row counts, so the fifth-decade
   * completion receipt carries the same integrity evidence the gate
   * brick does (HarmonizeSpec pins sliced ≡ one-shot at gate scale;

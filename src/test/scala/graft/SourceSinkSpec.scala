@@ -3,12 +3,11 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.harmonize.Harmonize
-import graft.model.Model
 import graft.sources.{EventsAdapter, OrdersAdapter}
 
-/** S2 (glob/recursive scan + path provenance), S9 (parquet sink), and the
-  * typed model layer — the staging-directory round trip the reference's
-  * harmonize performs (src/80_harmonize.py:20-43).
+/** S2 (glob/recursive scan + path provenance) and S9 (parquet sink) —
+  * the staging-directory round trip the reference's harmonize performs
+  * (src/80_harmonize.py:20-43).
   */
 class SourceSinkSpec extends SparkSpec {
   import spark.implicits._
@@ -34,21 +33,6 @@ class SourceSinkSpec extends SparkSpec {
       n -> t.substances.count()
     }.toMap
     assert(bySource == expected)
-  }
-
-  test("typed Dataset model round-trips the brick") {
-    implicit val s = spark
-    val brick = Harmonize.brick(spark, sf(), Seq(EventsAdapter, OrdersAdapter))
-    val acts = Model.activities(brick.activities)
-    // typed ops: filter + map on case classes
-    val positives = acts.filter(_.value == "positive")
-      .map(a => a.source).groupByKey(identity).count()
-      .collect().toMap
-    val untyped = brick.activities.filter(col("value") === "positive")
-      .groupBy("source").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(positives == untyped)
-    assert(acts.head().numvalue.isDefined)
   }
 
   test("parquet sink preserves schema and rows exactly (S9)") {
