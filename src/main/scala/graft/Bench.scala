@@ -136,8 +136,8 @@ object Bench {
     // serializes; SPARK_GRAFT_PREWARM=<threads> executes the WHOLE
     // builder queries concurrently first (body + collect, not just
     // the artifact/memo construction — the prewarm wall therefore
-    // includes some measured-query work; ADVICE r14) — memoGet's
-    // inflight futures already arbitrate concurrent builders, and
+    // includes some measured-query work; ADVICE r14) — SessionMemo's
+    // in-flight futures already arbitrate concurrent builders, and
     // local-mode jobs from many threads just share the scheduler.
     // DEFAULT OFF: with it on, cold_queries measures a prewarmed
     // session (attribution moves to the one prewarm line), so

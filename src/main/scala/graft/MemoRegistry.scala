@@ -9,8 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * memos hold their storage for exactly one driver run. A LONG-LIVED
   * session, though, would accumulate persisted frames forever — this
   * registry is the unpersist hook such a service calls between
-  * workloads. Each memo site registers an eviction callback at
-  * class-load; `evictAll(spark)` releases and forgets everything
+  * workloads. Each [[SessionMemo]] registers its eviction when it is
+  * constructed; `evictAll(spark)` releases and forgets everything
   * memoized FOR THAT SESSION (other sessions' entries are untouched),
   * after which the next access rebuilds bit-identically — every id in
   * the engine is a content hash, so eviction can never change results
@@ -20,7 +20,7 @@ object MemoRegistry {
   private val hooks =
     scala.collection.mutable.ArrayBuffer.empty[SparkSession => Unit]
 
-  def register(hook: SparkSession => Unit): Unit =
+  private def register(hook: SparkSession => Unit): Unit =
     hooks.synchronized { hooks += hook }
 
   def evictAll(spark: SparkSession): Unit = {
@@ -34,7 +34,7 @@ object MemoRegistry {
     // during one eviction (builds run outside every lock by design)
     // keeps its handoff; by the next eviction it has either memoized —
     // the hooks above just released it — or died, and only then is the
-    // dir reclaimed. This is exactly memoGet's documented contract
+    // dir reclaimed. This is exactly SessionMemo's documented contract
     // ("released at the next eviction").
     //
     // Liveness guard (ADVICE r8): "seen unreleased twice" alone is not
@@ -143,44 +143,6 @@ object MemoRegistry {
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
   }
 
-  /** Build-outside-the-lock memo access (ADVICE r7): the synchronized
-    * section only touches the map, so a long multi-job Spark build
-    * never serializes unrelated keys/sessions — or a concurrent
-    * `evictAll` — behind it. One builder per key is elected through an
-    * in-flight future (the cachedBrick pattern); concurrent callers of
-    * the SAME key block on that key's future only. A build that
-    * overlaps an eviction of its own key lands in the map afterwards
-    * and is released at the next eviction — same contract as
-    * cachedBrick.
-    */
-  def memoGet[K, V](memo: scala.collection.mutable.Map[K, V],
-      inflight: java.util.concurrent.ConcurrentHashMap[
-        K, java.util.concurrent.CompletableFuture[V]],
-      key: K)(build: => V): V =
-    memo.synchronized(memo.get(key)) match {
-      case Some(v) => v
-      case None =>
-        val fresh = new java.util.concurrent.CompletableFuture[V]()
-        val prior = inflight.putIfAbsent(key, fresh)
-        if (prior != null) prior.join()
-        else try {
-          // re-check under the lock AFTER winning the in-flight slot: a
-          // racing builder may have completed (memo.update + inflight
-          // .remove) between this thread's miss above and its
-          // putIfAbsent — without this, the key would build twice and
-          // the overwritten value's storage would leak unreleased
-          val v = memo.synchronized(memo.get(key)).getOrElse {
-            val built = build
-            memo.synchronized { memo.update(key, built) }
-            built
-          }
-          fresh.complete(v)
-          v
-        } catch {
-          case t: Throwable => fresh.completeExceptionally(t); throw t
-        } finally inflight.remove(key, fresh)
-    }
-
   /** Conf knobs for the materialization posture: `local` (default —
     * executor-local checkpoint blocks, fastest, no fault tolerance) or
     * `reliable` (parquet handoff under `spark.graft.checkpoint.dir`,
@@ -234,15 +196,62 @@ object MemoRegistry {
     }
   }
 
-  /** Evict a session's entries from one memo map: remove every key whose
-    * first component is `spark` and release each removed frame.
+  /** A session-scoped memo, `(SparkSession, K) → V`: every memoized
+    * value in the engine that lives for one session is held in one of
+    * these. The contract, for every memo:
+    *   - Single flight: concurrent callers of one key run `build` once;
+    *     the others block on that key's in-flight future only.
+    *   - The build runs OUTSIDE the map lock, so a long multi-job Spark
+    *     build never serializes other keys, other sessions or an
+    *     eviction behind it.
+    *   - A failed build caches nothing: its waiters get the failure and
+    *     the next call builds again.
+    *   - A build that overlaps an eviction of its own key lands in the
+    *     map afterwards and is released at the next eviction.
+    *   - `evict(spark)` drops that session's entries only and releases
+    *     `frames(v)` of each; a value that holds no frame (a store path,
+    *     a count, a driver-side matrix) is just forgotten.
+    * The memo registers its own `evict` for `evictAll` when constructed.
     */
-  def evictMap[K, V](spark: SparkSession,
-      memo: scala.collection.mutable.Map[K, V])(
-      sessionOf: K => SparkSession)(frames: V => Seq[DataFrame]): Unit =
-    memo.synchronized {
-      memo.keys.filter(k => sessionOf(k) eq spark).toSeq.foreach { k =>
+  final class SessionMemo[K, V](
+      frames: V => Seq[DataFrame] = (_: V) => Nil) {
+    private val memo =
+      scala.collection.mutable.Map.empty[(SparkSession, K), V]
+    private val inflight = new java.util.concurrent.ConcurrentHashMap[
+      (SparkSession, K), java.util.concurrent.CompletableFuture[V]]()
+    register(evict)
+
+    def apply(spark: SparkSession, key: K)(build: => V): V = {
+      val k = (spark, key)
+      memo.synchronized(memo.get(k)) match {
+        case Some(v) => v
+        case None =>
+          val fresh = new java.util.concurrent.CompletableFuture[V]()
+          val prior = inflight.putIfAbsent(k, fresh)
+          if (prior != null) prior.join()
+          else try {
+            // re-check under the lock AFTER winning the in-flight slot: a
+            // racing builder may have completed (memo.update + inflight
+            // .remove) between this thread's miss above and its
+            // putIfAbsent — without this, the key would build twice and
+            // the overwritten value's storage would leak unreleased
+            val v = memo.synchronized(memo.get(k)).getOrElse {
+              val built = build
+              memo.synchronized { memo.update(k, built) }
+              built
+            }
+            fresh.complete(v)
+            v
+          } catch {
+            case t: Throwable => fresh.completeExceptionally(t); throw t
+          } finally inflight.remove(k, fresh)
+      }
+    }
+
+    def evict(spark: SparkSession): Unit = memo.synchronized {
+      memo.keys.filter(_._1 eq spark).toSeq.foreach { k =>
         memo.remove(k).toSeq.flatMap(frames).foreach(release)
       }
     }
+  }
 }

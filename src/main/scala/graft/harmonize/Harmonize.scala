@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.chem.StructureConverter
 import graft.functions.CanonicalJson.canonicalizeJson
+import graft.MemoRegistry.SessionMemo
 import graft.sources.SourceAdapter
 
 /** The harmonize job — the reference's core pipeline
@@ -51,106 +52,66 @@ object Harmonize {
     * expensive is written to storage once and every consumer reads the
     * artifact, not the recipe.
     */
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String),
-    java.util.concurrent.CompletableFuture[Brick]]
+  private val memo = new SessionMemo[
+    (String, String, StructureConverter), Brick](b =>
+    Seq(b.substances, b.properties, b.activities))
 
   /** Evict this session's cached bricks (frees the checkpoint blocks);
-    * the next cachedBrick call rebuilds bit-identically. Registered with
-    * MemoRegistry for the one-call evict-everything path. In-flight
-    * builds (pending futures) are left in place: removing one would
-    * orphan the checkpoint blocks its builder is about to create — the
-    * next evict call collects it once complete.
+    * the next cachedBrick call rebuilds bit-identically.
     */
-  def evict(spark: SparkSession): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if ((e.getKey._1 eq spark) && e.getValue.isDone &&
-          !e.getValue.isCompletedExceptionally) {
-        it.remove()
-        val b = e.getValue.join()
-        Seq(b.substances, b.properties, b.activities)
-          .foreach(graft.MemoRegistry.release)
-      }
-    }
-  }
-
-  graft.MemoRegistry.register(evict)
+  def evict(spark: SparkSession): Unit = memo.evict(spark)
 
   def cachedBrick(spark: SparkSession, sfDir: String,
       adapters: Seq[SourceAdapter],
       converter: StructureConverter = StructureConverter.Stub): Brick = {
-    // identity hash, not class name: two differently-configured
+    val names = adapters.map(_.name).mkString(",")
+    // keyed on the converter instance itself: two differently-configured
     // instances of the same converter class must not share a brick
-    val key = (spark, sfDir,
-      adapters.map(_.name).mkString(",") + "/" +
-        converter.getClass.getName + "@" +
-        System.identityHashCode(converter))
-    // Per-key future, not a global lock: a brick build runs tens of
-    // seconds at sf0.1, and holding one monitor across it would
-    // serialize every unrelated session/key (and eviction) behind it.
-    // putIfAbsent elects one builder per key; losers block on that
-    // key's future only.
-    val fresh = new java.util.concurrent.CompletableFuture[Brick]()
-    val prior = memo.putIfAbsent(key, fresh)
-    if (prior != null) prior.join()
-    else try {
-      val out =
-        // CROSS-SESSION brick (VERDICT r10 #4): with the default stub
-        // converter — the only converter whose output is a pure
-        // function of the input files — the three tables live in a
-        // content-keyed ArtifactStore dir, so a second JVM on this
-        // machine READS the brick instead of re-staging 14 sources and
-        // re-assembling (the single largest block of the cold pass). A
-        // custom converter is an opaque instance the key cannot
-        // fingerprint; those builds stay session-local.
-        if ((converter eq StructureConverter.Stub) &&
-            graft.ArtifactStore.enabled(spark) &&
-            graft.ArtifactStore.hostableInput(spark, sfDir)) {
-          // VERDICT r14 #2 / r15 #5: the brick's one stored layout is
-          // BUCKETED files (activities and substances bucketed+sorted
-          // on sid, properties on pid), written straight by the build —
-          // one write of the fact table — and read back as bucketed
-          // catalog tables, so every sid/pid-keyed aggregate or join
-          // over the brick starts from the key's partitioning and
-          // elides its fact-side exchange (the BucketedBrickProbe
-          // receipt, 3.5× at 156M rows). v2 of the recipe writes ONE
-          // file per bucket per slice (guide §6 small files: v1 left
-          // ~94 task-files per bucket). `spark.graft.assembly.slices`
-          // only changes how many adapter slices the build deals.
-          val names = adapters.map(_.name).mkString(",")
-          val buckets = spark.conf.getOption(BrickBucketsKey)
-            .map(_.toInt).getOrElse(32)
-          val bkey = graft.ArtifactStore.dirKey(spark, sfDir,
-            s"brickb-v2-$buckets-" + names)
-          val slices = spark.conf.getOption(SlicesKey)
-            .map(_.trim.toInt).getOrElse(1)
-          val bdir = graft.ArtifactStore.ensure(spark, "brickb", bkey) {
-            tmp =>
-              buildBrickBucketedTo(spark, sfDir,
-                sliceAdapters(adapters, slices), converter, tmp, buckets)
-          }
-          val b = graft.sources.Catalog.registerBrickBucketedFiles(
-            spark, bdir, buckets)
-          // read-back frames get the same serialized-block residency
-          // the checkpointed build had, so warm consumers are
-          // unchanged; the persist KEEPS the bucketed partitioning
-          // (InMemoryRelation reports the cached scan's partitioning —
-          // BrickLayoutSpec pins it)
-          def pr(df: DataFrame) = df.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-          Brick(pr(b.substances), pr(b.properties), pr(b.activities))
-        } else buildBrick(spark, sfDir, adapters, converter)
-      fresh.complete(out)
-      out
-    } catch {
-      case e: Throwable =>
-        // a failed build must not poison the key: drop the entry so the
-        // next caller retries, and wake anyone already waiting
-        memo.remove(key, fresh)
-        fresh.completeExceptionally(e)
-        throw e
+    memo(spark, (sfDir, names, converter)) {
+      // CROSS-SESSION brick (VERDICT r10 #4): with the default stub
+      // converter — the only converter whose output is a pure
+      // function of the input files — the three tables live in a
+      // content-keyed ArtifactStore dir, so a second JVM on this
+      // machine READS the brick instead of re-staging 14 sources and
+      // re-assembling (the single largest block of the cold pass). A
+      // custom converter is an opaque instance the key cannot
+      // fingerprint; those builds stay session-local.
+      if ((converter eq StructureConverter.Stub) &&
+          graft.ArtifactStore.enabled(spark) &&
+          graft.ArtifactStore.hostableInput(spark, sfDir)) {
+        // VERDICT r14 #2 / r15 #5: the brick's one stored layout is
+        // BUCKETED files (activities and substances bucketed+sorted
+        // on sid, properties on pid), written straight by the build —
+        // one write of the fact table — and read back as bucketed
+        // catalog tables, so every sid/pid-keyed aggregate or join
+        // over the brick starts from the key's partitioning and
+        // elides its fact-side exchange (the BucketedBrickProbe
+        // receipt, 3.5× at 156M rows). v2 of the recipe writes ONE
+        // file per bucket per slice (guide §6 small files: v1 left
+        // ~94 task-files per bucket). `spark.graft.assembly.slices`
+        // only changes how many adapter slices the build deals.
+        val buckets = spark.conf.getOption(BrickBucketsKey)
+          .map(_.toInt).getOrElse(32)
+        val bkey = graft.ArtifactStore.dirKey(spark, sfDir,
+          s"brickb-v2-$buckets-" + names)
+        val slices = spark.conf.getOption(SlicesKey)
+          .map(_.trim.toInt).getOrElse(1)
+        val bdir = graft.ArtifactStore.ensure(spark, "brickb", bkey) {
+          tmp =>
+            buildBrickBucketedTo(spark, sfDir,
+              sliceAdapters(adapters, slices), converter, tmp, buckets)
+        }
+        val b = graft.sources.Catalog.registerBrickBucketedFiles(
+          spark, bdir, buckets)
+        // read-back frames get the same serialized-block residency
+        // the checkpointed build had, so warm consumers are
+        // unchanged; the persist KEEPS the bucketed partitioning
+        // (InMemoryRelation reports the cached scan's partitioning —
+        // BrickLayoutSpec pins it)
+        def pr(df: DataFrame) = df.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        Brick(pr(b.substances), pr(b.properties), pr(b.activities))
+      } else buildBrick(spark, sfDir, adapters, converter)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.MemoRegistry.SessionMemo
 
 /** Persisted product-quantization index — the artifact form of the ann9
   * query, completing the index family (minhash/simhash bands,
@@ -133,9 +134,6 @@ object ProductQuantIndex {
         "s -> cast(s.cid AS int))").as("code"))
   }
 
-  private val memo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), (DataFrame, DataFrame)]
-
   /** Session-scoped memo of the trained artifact per (session, sfDir) —
     * the dd3/dd4 candidate-index pattern. Training + encoding is the
     * expensive, DETERMINISTIC part (decimal-exact means, deterministic
@@ -145,14 +143,11 @@ object ProductQuantIndex {
     * the artifact, which is exactly the production posture: quantize
     * once, search many. Eviction via MemoRegistry rebuilds identically.
     */
-  private val inflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[(DataFrame, DataFrame)]]()
+  private val memo =
+    new SessionMemo[String, (DataFrame, DataFrame)](v => Seq(v._1, v._2))
 
   def cached(s: SparkSession, d: String, e: => DataFrame)
       : (DataFrame, DataFrame) =
-    // build OUTSIDE the map lock (ADVICE r7): training runs multiple
-    // Spark jobs; only same-key callers wait on it.
     // CROSS-SESSION (VERDICT r10 #4): training is deterministic
     // (decimal-exact means, total-order tiebreaks), so the artifact
     // lives in a content-keyed ArtifactStore dir — a second JVM reads
@@ -160,7 +155,7 @@ object ProductQuantIndex {
     // (the ann9/11/12/13 block of the cold pass). One corpus
     // fingerprint pass decides reuse; the session memo on top keeps
     // one fingerprint per JVM.
-    graft.MemoRegistry.memoGet(memo, inflight, (s, d)) {
+    memo(s, d) {
       val emb = e
       val key = graft.ArtifactStore.corpusKey(emb, "pq-v1",
         org.apache.spark.sql.functions.col("vec_id"),
@@ -170,10 +165,6 @@ object ProductQuantIndex {
         s.read.parquet(s"$dir/codes").persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     }
-
-  graft.MemoRegistry.register { spark =>
-    graft.MemoRegistry.evictMap(spark, memo)(_._1)(v => Seq(v._1, v._2))
-  }
 
   def write(e: DataFrame, path: String): Unit = {
     val (codebooks, codes) = build(e)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.MemoRegistry.SessionMemo
 
 /** Persisted int8 scalar-quantization index — the artifact form of the
   * ann8 query (same write/read policy as the minhash/simhash indexes in
@@ -72,9 +73,6 @@ object ScalarQuantIndex {
     reconstruct(spark.read.parquet(s"$path/codes"),
       spark.read.parquet(s"$path/stats"))
 
-  private val memo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), DataFrame]
-
   /** Session-scoped memo of the decoded-midpoint frame (vec_id, rv) per
     * (session, sfDir) — the ProductQuantIndex.cached pattern: quantize +
     * decode is deterministic (same corpus in, bit-identical midpoints
@@ -84,20 +82,13 @@ object ScalarQuantIndex {
     * frame is vector-count-sized (one row per vec), so the checkpoint
     * is small at any sf. Eviction via MemoRegistry rebuilds identically.
     */
-  private val inflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[DataFrame]]()
+  private val memo = new SessionMemo[String, DataFrame](Seq(_))
 
   def cachedDecoded(s: SparkSession, d: String, e: => DataFrame): DataFrame =
-    // build OUTSIDE the map lock (ADVICE r7) — see MemoRegistry.memoGet
-    graft.MemoRegistry.memoGet(memo, inflight, (s, d)) {
+    memo(s, d) {
       val (stats, codes) = build(e)
       reconstruct(codes, stats).coalesce(4).localCheckpoint()
     }
-
-  graft.MemoRegistry.register { spark =>
-    graft.MemoRegistry.evictMap(spark, memo)(_._1)(Seq(_))
-  }
 
   /** Top-k by decoded dot for the query rows selected by `isQuery`,
     * ranked with a deterministic tiebreak. Runs entirely off the

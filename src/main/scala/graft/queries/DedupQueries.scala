@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.MemoRegistry.SessionMemo
 import graft.Tables
 import graft.operators.Dedup
 
@@ -32,21 +33,15 @@ object DedupQueries extends QueryModule {
     * share it within one Verify/Bench session (results unchanged;
     * persist caches a deterministic plan).
     */
-  private val shMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), DataFrame]
+  private val shMemo = new SessionMemo[String, DataFrame](Seq(_))
 
   private def cachedShingles(s: SparkSession, d: String): DataFrame =
-    shMemo.synchronized {
-      shMemo.getOrElseUpdate((s, d),
-        Dedup.shingles(Tables.documents(s, d))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    shMemo(s, d) {
+      Dedup.shingles(Tables.documents(s, d))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val jMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), DataFrame]
-  private val jInflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[DataFrame]]()
+  private val jMemo = new SessionMemo[String, DataFrame](Seq(_))
 
   /** Jaccard pair frame shared by dd2 (census) and dd6 (materialize),
     * plus the component family (dd8/dd9/dd11/c1/c6/c7) through
@@ -54,13 +49,10 @@ object DedupQueries extends QueryModule {
     * candidate generation + exact-Jaccard verify is deterministic, so
     * the pair frame persists in a corpus-keyed ArtifactStore dir —
     * the shingle explode and band joins run once per machine, not per
-    * JVM. Accessed through memoGet (ADVICE r11): the fingerprint job +
-    * store build run OUTSIDE any module lock, so an unrelated key or
-    * an eviction never serializes behind a minutes-long build — only
-    * same-key callers block, on that key's in-flight future.
+    * JVM.
     */
   private[queries] def cachedJaccard(s: SparkSession, d: String): DataFrame =
-    graft.MemoRegistry.memoGet(jMemo, jInflight, (s, d)) {
+    jMemo(s, d) {
       val key = graft.ArtifactStore.corpusKey(Tables.documents(s, d),
         "jaccard-v1", col("doc_id"), col("text"))
       val dir = graft.ArtifactStore.ensure(s, "jaccard", key) { tmp =>
@@ -78,20 +70,15 @@ object DedupQueries extends QueryModule {
     * SimilarityQueries). Queries against them stay cheap and the
     * signature build cost is paid exactly once.
     */
-  private val candMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String, String), DataFrame]
-  private val candInflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String),
-    java.util.concurrent.CompletableFuture[DataFrame]]()
+  private val candMemo = new SessionMemo[(String, String), DataFrame](Seq(_))
 
   private def cachedCandidates(s: SparkSession, d: String, kind: String)
       (build: => DataFrame): DataFrame =
-    graft.MemoRegistry.memoGet(candMemo, candInflight, (s, d, kind)) {
+    candMemo(s, (d, kind)) {
       // CROSS-SESSION (VERDICT r10 #4): signature + banding builds
       // are deterministic functions of the documents table — the
       // candidate tables persist in corpus-keyed store dirs like the
-      // Jaccard frame. Built outside the map lock via memoGet
-      // (ADVICE r11) — each (d, kind)'s build blocks only its own key.
+      // Jaccard frame.
       val key = graft.ArtifactStore.corpusKey(Tables.documents(s, d),
         s"cand-$kind-v1", col("doc_id"), col("text"))
       val dir = graft.ArtifactStore.ensure(s, s"cand-$kind", key) {
@@ -106,16 +93,10 @@ object DedupQueries extends QueryModule {
     * comes back already checkpointed+cached by the operator, so it is
     * stored as-is (no second persist).
     */
-  private val compMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), DataFrame]
-  private val compInflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[DataFrame]]()
+  private val compMemo = new SessionMemo[String, DataFrame](Seq(_))
 
   private[queries] def cachedComponents(s: SparkSession, d: String): DataFrame =
-    graft.MemoRegistry.memoGet(compMemo, compInflight, (s, d)) {
-      // label propagation runs EAGERLY (checkpointed iterations) —
-      // memoGet keeps that multi-job build out of any module lock
+    compMemo(s, d) {
       graft.operators.Graph.connectedComponents(
         cachedJaccard(s, d).filter(col("j") >= 0.5)
           .select(col("da"), col("db")),
@@ -123,19 +104,14 @@ object DedupQueries extends QueryModule {
     }
 
   /** dd12's k-means-trained assignment (vec_id, embedding, cid, ccos),
-    * built outside any map lock via memoGet: the frame feeds the census
-    * AND both sides of the within-cluster pair join, so without the
-    * memo the crossJoin+window assignment would execute three times per
-    * run.
+    * memoized: the frame feeds the census AND both sides of the
+    * within-cluster pair join, so without the memo the crossJoin+window
+    * assignment would execute three times per run.
     */
-  private val semMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), DataFrame]
-  private val semInflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[DataFrame]]()
+  private val semMemo = new SessionMemo[String, DataFrame](Seq(_))
 
   private def cachedSemAssigned(s: SparkSession, d: String): DataFrame =
-    graft.MemoRegistry.memoGet(semMemo, semInflight, (s, d)) {
+    semMemo(s, d) {
       graft.functions.GraftFunctions.register(s)
       import graft.operators.KMeans
       val e = Tables.embeddings(s, d)
@@ -155,12 +131,6 @@ object DedupQueries extends QueryModule {
         .select(col("vec_id"), col("embedding"), col("cid"), col("ccos"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-
-  graft.MemoRegistry.register { spark =>
-    Seq(shMemo, jMemo, compMemo, semMemo).foreach(m =>
-      graft.MemoRegistry.evictMap(spark, m)(_._1)(Seq(_)))
-    graft.MemoRegistry.evictMap(spark, candMemo)(_._1)(Seq(_))
-  }
 
   val queries: Map[String, Q] = Map(
     // Exact + normalized-exact dedup: hash-groupBy on content hash.

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.MemoRegistry.SessionMemo
 import graft.Tables
 import graft.functions.GraftFunctions
 
@@ -653,8 +654,7 @@ object SimilarityQueries extends QueryModule {
     * project-collapse inlining trap); vectors are re-assembled with
     * sort_array(collect_list(struct)) only at consumption points.
     */
-  private val centMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), DataFrame]
+  private val centMemo = new SessionMemo[String, DataFrame](Seq(_))
 
   /** Top-`nProbe` centroid lists per query vector — the probe-set
     * builder every IVF query shares (ann6/ann11/ann12/ann13, dd10's
@@ -682,51 +682,32 @@ object SimilarityQueries extends QueryModule {
     * DedupQueries' — they hold the session reference until JVM exit.)
     */
   private def centroids(s: SparkSession, d: String): DataFrame =
-    centMemo.synchronized {
-      centMemo.getOrElseUpdate((s, d),
-        Tables.embeddings(s, d)
-          .select(col("label"), posexplode(col("embedding")))
-          .groupBy(col("label"), col("pos"))
-          .agg((sum(col("col").cast(org.apache.spark.sql.types
-            .DecimalType(27, 12))).cast("double") / count(lit(1))).as("c"))
-          .groupBy(col("label"))
-          .agg(expr("transform(sort_array(collect_list(struct(pos, c))), " +
-            "x -> x.c)").as("cv"))
-          .select(col("label").as("clabel"), col("cv"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    centMemo(s, d) {
+      Tables.embeddings(s, d)
+        .select(col("label"), posexplode(col("embedding")))
+        .groupBy(col("label"), col("pos"))
+        .agg((sum(col("col").cast(org.apache.spark.sql.types
+          .DecimalType(27, 12))).cast("double") / count(lit(1))).as("c"))
+        .groupBy(col("label"))
+        .agg(expr("transform(sort_array(collect_list(struct(pos, c))), " +
+          "x -> x.c)").as("cv"))
+        .select(col("label").as("clabel"), col("cv"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** The corpus content key shared by this module's store-hosted
     * artifacts (assignment, PQ variants already key independently):
     * one fingerprint pass per (session, sfDir), memoized.
     */
-  private val embKeyMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), String]
-  private val embKeyInflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[String]]()
+  private val embKeyMemo = new SessionMemo[String, String]()
 
   private def embKey(s: SparkSession, d: String, recipe: String): String =
-    // the fingerprint is a Spark job (corpusKey aggregates the corpus);
-    // memoGet keeps it outside any module lock (ADVICE r11)
-    recipe + "-" + graft.MemoRegistry.memoGet(
-      embKeyMemo, embKeyInflight, (s, d)) {
+    recipe + "-" + embKeyMemo(s, d) {
       graft.ArtifactStore.corpusKey(Tables.embeddings(s, d), "",
         col("vec_id"), col("embedding"), col("label"))
     }
 
-  graft.MemoRegistry.register { spark =>
-    embKeyMemo.synchronized {
-      embKeyMemo.keys.filter(_._1 eq spark).toSeq
-        .foreach(k => embKeyMemo.remove(k): Unit)
-    }
-  }
-
-  private val assignMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), DataFrame]
-  private val assignInflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[DataFrame]]()
+  private val assignMemo = new SessionMemo[String, DataFrame](Seq(_))
 
   /** Every vector with its nearest-centroid list id, memoized + persisted
     * per session: the scoring pass is the expensive stage and ann4/ann5
@@ -741,12 +722,11 @@ object SimilarityQueries extends QueryModule {
     * window formulation are unchanged.
     */
   private def cachedAssigned(s: SparkSession, d: String): DataFrame =
-    graft.MemoRegistry.memoGet(assignMemo, assignInflight, (s, d)) {
+    assignMemo(s, d) {
       GraftFunctions.register(s)
       // CROSS-SESSION (VERDICT r10 #4): the IVF assignment is the
       // expensive deterministic scoring pass ann4/5/11/12/13 all
-      // ride — store-hosted like the PQ artifacts. memoGet keeps the
-      // fingerprint + store build outside any module lock (ADVICE r11).
+      // ride — store-hosted like the PQ artifacts.
       // Recipe bumped v1→v2 with the fused swap: output is
       // bit-identical, but a stale-artifact reuse must not mask the
       // new build path.
@@ -762,54 +742,30 @@ object SimilarityQueries extends QueryModule {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val centMatMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String),
-      graft.operators.KMeans.CentroidMatrix]
-  private val centMatInflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.util.concurrent.CompletableFuture[
-      graft.operators.KMeans.CentroidMatrix]]()
+  private val centMatMemo =
+    new SessionMemo[String, graft.operators.KMeans.CentroidMatrix]()
 
   /** The corpus quantizer's driver-resident centroid matrix, collected
     * ONCE per (session, sfDir) and shared by every fused consumer
     * (queryProbes behind ann6/11/12/13/15 + dd10, the assignment
     * artifact build) — VERDICT r13 #3: the quantizer-scale collect was
-    * repeating per call site. memoGet keeps the collect (a Spark job)
-    * outside any module lock; `KMeans.centroidCollects` is the probe
+    * repeating per call site. `KMeans.centroidCollects` is the probe
     * receipt that it really runs once.
     */
   private def centroidMatrix(s: SparkSession, d: String)
       : graft.operators.KMeans.CentroidMatrix =
-    graft.MemoRegistry.memoGet(centMatMemo, centMatInflight, (s, d)) {
+    centMatMemo(s, d) {
       graft.operators.KMeans.collectCentroids(
         centroids(s, d).select(col("clabel").as("cid"), col("cv")))
     }
 
-  graft.MemoRegistry.register { spark =>
-    Seq(centMemo, assignMemo, refinedMemo).foreach(m =>
-      graft.MemoRegistry.evictMap(spark, m)(_._1)(Seq(_)))
-    centMatMemo.synchronized {
-      centMatMemo.keys.filter(_._1 eq spark).toSeq
-        .foreach(k => centMatMemo.remove(k): Unit)
-    }
-    graft.MemoRegistry.evictMap(spark, resMemo)(_._1)(v =>
-      Seq(v._1, v._2))
-    // the ann14 artifact is content-keyed and SHARED ACROSS SESSIONS
-    // (ArtifactStore) — eviction forgets this session's pointer but
-    // never deletes the dir: another JVM may be reading it, and the
-    // whole point of the store is that the next session reuses it.
-    // Reclamation is ArtifactStore.prune (ADVICE r10) — an explicit
-    // age-gated GC the operator runs, never an implicit eviction.
-    idxMemo.synchronized {
-      idxMemo.keys.filter(_._1 eq spark).toSeq
-        .foreach(k => idxMemo.remove(k): Unit)
-    }
-  }
-
-  private val idxMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), String]
-  private val idxInflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[String]]()
+  // the ann14 artifact is content-keyed and SHARED ACROSS SESSIONS
+  // (ArtifactStore) — eviction forgets this session's pointer but
+  // never deletes the dir: another JVM may be reading it, and the
+  // whole point of the store is that the next session reuses it.
+  // Reclamation is ArtifactStore.prune (ADVICE r10) — an explicit
+  // age-gated GC the operator runs, never an implicit eviction.
+  private val idxMemo = new SessionMemo[String, String]()
 
   /** ann14's on-disk IVF-PQ artifact: write from the base corpus
     * (vec_id % 10 ≠ 7), then append the held-out slice twice — the
@@ -826,7 +782,7 @@ object SimilarityQueries extends QueryModule {
     */
   private val Ann14Recipe = "v1-mod10ne7-labelmean"
   private def lifecycleArtifact(s: SparkSession, d: String): String =
-    graft.MemoRegistry.memoGet(idxMemo, idxInflight, (s, d)) {
+    idxMemo(s, d) {
       GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
       // ArtifactStore.corpusKey via embKey (ADVICE r10): xor +
@@ -871,18 +827,13 @@ object SimilarityQueries extends QueryModule {
     * rows). On a twin-free corpus every component is trivial and R
     * lands on the floor 10, which is what keeps the oracle's literal
     * rank-10 cut exact at the gate scales. Memoized per
-    * (session, sfDir) via memoGet — the census is a multi-job build
-    * (pairs + component propagation) and must run once, outside any
-    * module lock.
+    * (session, sfDir) — the census is a multi-job build (pairs +
+    * component propagation) and must run once.
     */
-  private val rShortMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), Int]
-  private val rShortInflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[Int]]()
+  private val rShortMemo = new SessionMemo[String, Int]()
 
   private def shortlistWidth(s: SparkSession, d: String): Int =
-    graft.MemoRegistry.memoGet(rShortMemo, rShortInflight, (s, d)) {
+    rShortMemo(s, d) {
       // CROSS-SESSION (VERDICT r14 #4): the census chain below (pair
       // scan + components) is the expensive part and is deterministic
       // end-to-end (seeded blocking, min-id components, the shortlistR
@@ -948,18 +899,8 @@ object SimilarityQueries extends QueryModule {
       } finally pairs.unpersist(blocking = false)
     }
 
-  graft.MemoRegistry.register { spark =>
-    rShortMemo.synchronized {
-      rShortMemo.keys.filter(_._1 eq spark).toSeq
-        .foreach(k => rShortMemo.remove(k): Unit)
-    }
-  }
-
-  private val resMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), (DataFrame, DataFrame)]
-  private val resInflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[(DataFrame, DataFrame)]]()
+  private val resMemo =
+    new SessionMemo[String, (DataFrame, DataFrame)](v => Seq(v._1, v._2))
 
   /** Residual-PQ artifact per (session, sfDir) — codebooks trained on
     * the coarse-centroid RESIDUALS (r = normalized vector − its list's
@@ -970,7 +911,7 @@ object SimilarityQueries extends QueryModule {
     */
   private def cachedResidualPq(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    graft.MemoRegistry.memoGet(resMemo, resInflight, (s, d)) {
+    resMemo(s, d) {
       // CROSS-SESSION (VERDICT r10 #4): residual codebook training is
       // deterministic end-to-end (decimal-exact centroids, seeded
       // slices, total-order tiebreaks) — same store treatment as the
@@ -999,11 +940,7 @@ object SimilarityQueries extends QueryModule {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     }
 
-  private val refinedMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), DataFrame]
-  private val refinedInflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[DataFrame]]()
+  private val refinedMemo = new SessionMemo[String, DataFrame](Seq(_))
 
   /** Exact top-3 ground truth for the recall audits (ann8/9/11/12/13):
     * a broadcast nested-loop of the pinned query vectors against the
@@ -1070,7 +1007,7 @@ object SimilarityQueries extends QueryModule {
     */
   private def refinedProbes(s: SparkSession, d: String,
       nVec: Long): DataFrame =
-    graft.MemoRegistry.memoGet(refinedMemo, refinedInflight, (s, d)) {
+    refinedMemo(s, d) {
       GraftFunctions.register(s)
       // CROSS-SESSION (VERDICT r14 #4): the blocking is deterministic
       // end-to-end (seeded hash-min init, seeded training sample, one

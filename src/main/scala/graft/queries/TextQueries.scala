@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.MemoRegistry.SessionMemo
 import graft.Tables
 
 /** Text analysis over the `documents` table — the training-data-pipeline
@@ -69,25 +70,20 @@ object TextQueries extends QueryModule {
     * scoring pass both derive from it. At corpus scale it would be
     * written alongside the data, not rebuilt per query.
     */
-  private val bigramMemo = scala.collection.mutable
-    .Map.empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
+  private val bigramMemo =
+    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
 
   private def cachedBigrams(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    bigramMemo.synchronized {
-      bigramMemo.getOrElseUpdate((s, d),
-        Tables.documents(s, d)
-          .withColumn("ts", split(lower(col("text")), " "))
-          .filter(size(col("ts")) >= 2)
-          .select(col("doc_id"), col("lang"), explode(expr(
-            "transform(sequence(1, size(ts)-1), " +
-              "g -> concat_ws(' ', ts[g-1], ts[g]))")).as("bg"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    bigramMemo(s, d) {
+      Tables.documents(s, d)
+        .withColumn("ts", split(lower(col("text")), " "))
+        .filter(size(col("ts")) >= 2)
+        .select(col("doc_id"), col("lang"), explode(expr(
+          "transform(sequence(1, size(ts)-1), " +
+            "g -> concat_ws(' ', ts[g-1], ts[g]))")).as("bg"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-
-  graft.MemoRegistry.register(spark =>
-    graft.MemoRegistry.evictMap(spark, bigramMemo)(_._1)(Seq(_)))
 
   /** The x13 chunk transform: 32-token windows at stride 24 within each
     * doc (window starts 0, 24, 48, …; tail runs short). Single
@@ -834,42 +830,27 @@ object TextQueries extends QueryModule {
   // corpus-scale window frame against the dup set each session; a
   // pre-v5 artifact fails the readSpans loud gate
   private val Wx24Recipe = "x24-v5-mod3split"
-  private val wiMemo = scala.collection.mutable
-    .Map.empty[(org.apache.spark.sql.SparkSession, String), String]
-  private val wiInflight = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    java.util.concurrent.CompletableFuture[String]]()
+
+  // the artifact is shared across sessions — eviction forgets this
+  // session's pointer only (ArtifactStore.prune is the GC)
+  private val wiMemo = new SessionMemo[String, String]()
 
   /** The documents-corpus content key shared by this module's
     * store-hosted artifacts and win5's artifact adoption: one
     * fingerprint pass per (session, sfDir), memoized.
     */
-  private val docKeyMemo = scala.collection.mutable
-    .Map.empty[(org.apache.spark.sql.SparkSession, String), String]
-  private val docKeyInflight = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    java.util.concurrent.CompletableFuture[String]]()
+  private val docKeyMemo = new SessionMemo[String, String]()
 
   private def docKey(s: org.apache.spark.sql.SparkSession, d: String,
       recipe: String): String =
-    // the fingerprint is a Spark job (corpusKey aggregates the corpus);
-    // memoGet keeps it outside any module lock (ADVICE r11)
-    recipe + "-" + graft.MemoRegistry.memoGet(
-      docKeyMemo, docKeyInflight, (s, d)) {
+    recipe + "-" + docKeyMemo(s, d) {
       graft.ArtifactStore.corpusKey(Tables.documents(s, d), "",
         col("doc_id"), col("text"), col("lang"), col("source"))
     }
 
-  graft.MemoRegistry.register { spark =>
-    docKeyMemo.synchronized {
-      docKeyMemo.keys.filter(_._1 eq spark).toSeq
-        .foreach(k => docKeyMemo.remove(k): Unit)
-    }
-  }
-
   private def windowIndexArtifact(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    graft.MemoRegistry.memoGet(wiMemo, wiInflight, (s, d)) {
+    wiMemo(s, d) {
       val docs = Tables.documents(s, d)
       graft.ArtifactStore.ensure(s, "x24-winidx",
         docKey(s, d, Wx24Recipe)) { dir =>
@@ -882,15 +863,6 @@ object TextQueries extends QueryModule {
         graft.operators.WindowIndex.append(delta, idx)
       } + "/idx"
     }
-
-  graft.MemoRegistry.register { spark =>
-    // the artifact is shared across sessions — eviction forgets this
-    // session's pointer only (ArtifactStore.prune is the GC)
-    wiMemo.synchronized {
-      wiMemo.keys.filter(_._1 eq spark).toSeq
-        .foreach(k => wiMemo.remove(k): Unit)
-    }
-  }
 
   /** Word-5-gram window frame, read by x21/x23/x24 (since round 15
     * x18 answers from docstats+dupc and x20/x22 from the spans table —
@@ -909,17 +881,12 @@ object TextQueries extends QueryModule {
     * corpus-sized and narrow — the checkpointLarge storage-level
     * rationale applies.
     */
-  private val win5Memo = scala.collection.mutable
-    .Map.empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-  private val win5Inflight = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    java.util.concurrent.CompletableFuture[
-      org.apache.spark.sql.DataFrame]]()
+  private val win5Memo =
+    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
 
   private def win5(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    graft.MemoRegistry.memoGet(win5Memo, win5Inflight, (s, d)) {
+    win5Memo(s, d) {
       // The PERSISTED index is the source (VERDICT r12 #3): every
       // window-scale reader (x21/x23/x24) reads the committed
       // windows of the x24 artifact — ensured here, so whichever
@@ -927,17 +894,12 @@ object TextQueries extends QueryModule {
       // (including x24 itself) rides the same files. The x24 oracle +
       // WindowIndexSpec pin the stored frame ≡ windows(documents)
       // row-for-row, so nothing changes downstream; what disappears is
-      // the session-local re-explode of the corpus text. memoGet (not
-      // a module monitor) because the first call may BUILD the
-      // artifact — a multi-job write (ADVICE r11 discipline).
+      // the session-local re-explode of the corpus text.
       graft.operators.WindowIndex
         .readWindows(s, windowIndexArtifact(s, d))
         .persist(org.apache.spark.storage.StorageLevel
           .MEMORY_AND_DISK_SER)
     }
-
-  graft.MemoRegistry.register(spark =>
-    graft.MemoRegistry.evictMap(spark, win5Memo)(_._1)(Seq(_)))
 
   /** Hashes occurring in ≥2 DISTINCT docs (within-doc repeats can't
     * self-flag) — the family's dup criterion; since round 15 x24 is
@@ -955,17 +917,12 @@ object TextQueries extends QueryModule {
     * census-merge read runs ONCE per session and the persisted
     * minority set broadcasts where it fits.
     */
-  private val dupHashMemo = scala.collection.mutable
-    .Map.empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-  private val dupHashInflight = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    java.util.concurrent.CompletableFuture[
-      org.apache.spark.sql.DataFrame]]()
+  private val dupHashMemo =
+    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
 
   private def dupHashes(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    graft.MemoRegistry.memoGet(dupHashMemo, dupHashInflight, (s, d)) {
+    dupHashMemo(s, d) {
       // From the artifact's COMMITTED census (VERDICT r12 #3):
       // readDup merges the ≤ k stored per-batch delta files — a few
       // post-aggregate rows per hash — where dupHashesOf(win5) re-ran
@@ -977,32 +934,21 @@ object TextQueries extends QueryModule {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  graft.MemoRegistry.register(spark =>
-    graft.MemoRegistry.evictMap(spark, dupHashMemo)(_._1)(Seq(_)))
-
   /** Per-doc stats off the artifact's docstats dirs (doc_id, lang,
     * n_win, n_words) — ONE narrow row per doc, no window-scale scan.
     * x18's denominator/doc census and x22's word totals (which used to
     * re-tokenize the whole corpus text) both read this.
     */
-  private val docStatsMemo = scala.collection.mutable
-    .Map.empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-  private val docStatsInflight = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    java.util.concurrent.CompletableFuture[
-      org.apache.spark.sql.DataFrame]]()
+  private val docStatsMemo =
+    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
 
   private def docStats(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    graft.MemoRegistry.memoGet(docStatsMemo, docStatsInflight, (s, d)) {
+    docStatsMemo(s, d) {
       graft.operators.WindowIndex
         .readDocStats(s, windowIndexArtifact(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-
-  graft.MemoRegistry.register(spark =>
-    graft.MemoRegistry.evictMap(spark, docStatsMemo)(_._1)(Seq(_)))
 
   /** Per-doc GLOBAL dup-window counts off the artifact's summable dupc
     * deltas (VERDICT r13 #2): the window-scale win5 ⋈ dupHashes join
@@ -1011,24 +957,16 @@ object TextQueries extends QueryModule {
     * that flipped a hash emitted its retroactive correction at commit
     * time (dup status is monotone).
     */
-  private val dupCountMemo = scala.collection.mutable
-    .Map.empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-  private val dupCountInflight = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    java.util.concurrent.CompletableFuture[
-      org.apache.spark.sql.DataFrame]]()
+  private val dupCountMemo =
+    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
 
   private def dupCounts(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    graft.MemoRegistry.memoGet(dupCountMemo, dupCountInflight, (s, d)) {
+    dupCountMemo(s, d) {
       graft.operators.WindowIndex
         .readDupCounts(s, windowIndexArtifact(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-
-  graft.MemoRegistry.register(spark =>
-    graft.MemoRegistry.evictMap(spark, dupCountMemo)(_._1)(Seq(_)))
 
   /** Per-doc SPAN stats off the artifact's spans deltas (VERDICT r14
     * #3): (doc_id, lang, longest_run, n_runs, removed_words), one
@@ -1039,24 +977,16 @@ object TextQueries extends QueryModule {
     * a read of ≤|batches| narrow dirs merged by max-seq.
     * WindowIndexSpec pins incremental ≡ one-shot ≡ brute recompute.
     */
-  private val spanStatsMemo = scala.collection.mutable
-    .Map.empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-  private val spanStatsInflight = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    java.util.concurrent.CompletableFuture[
-      org.apache.spark.sql.DataFrame]]()
+  private val spanStatsMemo =
+    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
 
   private def spanStats(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    graft.MemoRegistry.memoGet(spanStatsMemo, spanStatsInflight, (s, d)) {
+    spanStatsMemo(s, d) {
       graft.operators.WindowIndex
         .readSpans(s, windowIndexArtifact(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-
-  graft.MemoRegistry.register(spark =>
-    graft.MemoRegistry.evictMap(spark, spanStatsMemo)(_._1)(Seq(_)))
 
   /** Per-hash global doc-frequency census (h, df) — x23's rare-window
     * frame, read from the artifact's committed v3 census (VERDICT r12
@@ -1068,24 +998,16 @@ object TextQueries extends QueryModule {
     * consumes the frame three times per execution; memo+persist keeps
     * that one read.
     */
-  private val dfCensusMemo = scala.collection.mutable
-    .Map.empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-  private val dfCensusInflight = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    java.util.concurrent.CompletableFuture[
-      org.apache.spark.sql.DataFrame]]()
+  private val dfCensusMemo =
+    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
 
   private def dfCensus(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    graft.MemoRegistry.memoGet(dfCensusMemo, dfCensusInflight, (s, d)) {
+    dfCensusMemo(s, d) {
       graft.operators.WindowIndex
         .readDf(s, windowIndexArtifact(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-
-  graft.MemoRegistry.register(spark =>
-    graft.MemoRegistry.evictMap(spark, dfCensusMemo)(_._1)(Seq(_)))
 
   /** The x16 per-doc DSIR importance frame (doc_id, lang, n_feats,
     * w_num, w_den, w) over the FULL corpus — factored out so

@@ -127,9 +127,8 @@ object SiderAdapter extends SourceAdapter {
 
     // the reference's post-write non-empty smoke assertion (13:66-68)
     // lives in NewIntegratorsSpec with the other adapters' checks —
-    // staging() runs under cachedStaging's memo lock, so executing
-    // Spark actions here would make every adapter's first access pay
-    // three jobs while holding the global staging lock (ADVICE r7)
+    // staging() is cachedStaging's build, so executing Spark actions
+    // here would make every adapter's first access pay three more jobs
     StagingTriplet(subs, props, acts)
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.MemoRegistry.SessionMemo
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -65,31 +66,16 @@ object SourceAdapter {
     * BrickProfile: 'brick.checkpoint' 82 s at sf0.01 vs 59 s at sf0.1 —
     * pure planning). With staged leaves the same step is seconds.
     */
-  private val memo = scala.collection.mutable.Map
-    .empty[(SparkSession, String, String), StagingTriplet]
-
-  /** In-flight builders (MemoRegistry.memoGet): one builder per key,
-    * concurrent callers of the same key block on its future only —
-    * and, the round-16 point, builders of DIFFERENT adapters no longer
-    * serialize behind one map monitor (the pre-r16 code held
-    * `memo.synchronized` across the whole multi-job staging build, so
-    * the guide-§2.6 concurrent submission in the brick assembly and
-    * the bench prewarm pool got zero actual staging overlap).
-    */
-  private val inflight = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String),
-    java.util.concurrent.CompletableFuture[StagingTriplet]]
+  private val memo = new SessionMemo[
+    (String, String), StagingTriplet](t =>
+    Seq(t.substances, t.properties, t.activities))
 
   /** Evict this session's staged triplets; next access re-stages. */
-  def evict(spark: SparkSession): Unit =
-    graft.MemoRegistry.evictMap(spark, memo)(_._1)(t =>
-      Seq(t.substances, t.properties, t.activities))
-
-  graft.MemoRegistry.register(evict)
+  def evict(spark: SparkSession): Unit = memo.evict(spark)
 
   def cachedStaging(a: SourceAdapter, spark: SparkSession,
       sfDir: String): StagingTriplet =
-    graft.MemoRegistry.memoGet(memo, inflight, (spark, sfDir, a.name)) {
+    memo(spark, (sfDir, a.name)) {
       if (!graft.ArtifactStore.enabled(spark) ||
           !graft.ArtifactStore.hostableInput(spark, sfDir)) {
         // opt-out (spark.graft.artifact.enabled=false) or an input dir

@@ -1,7 +1,8 @@
 package graft
 
 import graft.harmonize.Harmonize
-import graft.sources.SourceAdapter
+import graft.operators.ProductQuantIndex
+import graft.sources.{EventsAdapter, SourceAdapter}
 
 /** MemoRegistry eviction: a long-lived session can release every
   * session-scoped memoized frame (brick checkpoints, staged triplets,
@@ -42,12 +43,29 @@ class MemoEvictionSpec extends SparkSpec {
     val d = sf()
     Harmonize.cachedBrick(spark, d, SourceAdapter.all).activities.count()
     val other = spark.newSession()
-    // evicting through a DIFFERENT session must not drop this one's memo:
-    // the brick frame is still served from storage (same object identity)
-    val before = Harmonize.cachedBrick(spark, d, SourceAdapter.all)
+    // the brick, a staged triplet and the PQ artifact: three memos with
+    // different keys and frame shapes
+    def memoized() = (
+      Harmonize.cachedBrick(spark, d, SourceAdapter.all).activities,
+      SourceAdapter.cachedStaging(EventsAdapter, spark, d).activities,
+      ProductQuantIndex.cached(spark, d, Tables.embeddings(spark, d))._2)
+    // evicting through a DIFFERENT session must not drop this one's
+    // memos: each frame is still served from storage (same object
+    // identity), whether the other session evicts one memo or all
+    val before = memoized()
     Harmonize.evict(other)
-    val after = Harmonize.cachedBrick(spark, d, SourceAdapter.all)
-    assert(before.activities eq after.activities)
+    SourceAdapter.evict(other)
+    MemoRegistry.evictAll(other)
+    val after = memoized()
+    assert(before._1 eq after._1)
+    assert(before._2 eq after._2)
+    assert(before._3 eq after._3)
+    // evicting THIS session drops them: the next access builds anew
+    MemoRegistry.evictAll(spark)
+    val rebuilt = memoized()
+    assert(rebuilt._1 ne before._1)
+    assert(rebuilt._2 ne before._2)
+    assert(rebuilt._3 ne before._3)
     MemoRegistry.evictAll(spark)
   }
 }

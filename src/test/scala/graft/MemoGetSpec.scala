@@ -1,29 +1,27 @@
 package graft
 
-import java.util.concurrent.{CompletableFuture, ConcurrentHashMap,
-  CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.scalatest.funsuite.AnyFunSuite
+import graft.MemoRegistry.SessionMemo
 
-/** Concurrency contract of `MemoRegistry.memoGet` (the ADVICE-r7 fix:
-  * build OUTSIDE the map lock, single-flight per key). Pure-JVM tests —
-  * the builds here are plain values, the properties are about locking.
+/** Concurrency contract of `MemoRegistry.SessionMemo` (build OUTSIDE
+  * the map lock, single-flight per key). The builds here are plain
+  * values and the memos hold no frames; the properties are about
+  * locking.
   */
-class MemoGetSpec extends AnyFunSuite {
+class MemoGetSpec extends SparkSpec {
 
-  private def freshMaps() = (
-    scala.collection.mutable.Map.empty[String, Int],
-    new ConcurrentHashMap[String, CompletableFuture[Int]]())
+  private def fresh() = new SessionMemo[String, Int]()
 
   test("single-flight: N concurrent callers of one key build once") {
-    val (memo, inflight) = freshMaps()
+    val memo = fresh()
     val builds = new AtomicInteger(0)
     val start = new CountDownLatch(1)
     val results = new ConcurrentHashMap[Int, Int]()
     val threads = (0 until 16).map { i =>
       new Thread(() => {
         start.await()
-        val v = MemoRegistry.memoGet(memo, inflight, "k") {
+        val v = memo(spark, "k") {
           builds.incrementAndGet(); Thread.sleep(50); 42
         }
         results.put(i, v)
@@ -33,16 +31,16 @@ class MemoGetSpec extends AnyFunSuite {
     threads.foreach(_.join(10000))
     assert(builds.get() == 1, s"build ran ${builds.get()} times")
     assert((0 until 16).forall(results.get(_) == 42))
-    assert(memo.synchronized(memo.get("k")).contains(42))
-    assert(inflight.isEmpty, "in-flight entry leaked")
+    // memoized: a later caller is served without building
+    assert(memo(spark, "k")(sys.error("rebuilt a memoized key")) == 42)
   }
 
   test("a slow build does not serialize other keys or map access") {
-    val (memo, inflight) = freshMaps()
+    val memo = fresh()
     val slowStarted = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     val slow = new Thread(() => {
-      MemoRegistry.memoGet(memo, inflight, "slow") {
+      memo(spark, "slow") {
         slowStarted.countDown()
         release.await(10, TimeUnit.SECONDS); 1
       }: Unit
@@ -50,36 +48,40 @@ class MemoGetSpec extends AnyFunSuite {
     slow.start()
     assert(slowStarted.await(5, TimeUnit.SECONDS), "slow build never ran")
     // with the build held open: a DIFFERENT key must complete promptly,
-    // and the synchronized section must be free (evictAll's pattern)
+    // and evicting the same memo must not wait for the build either
     val t0 = System.nanoTime()
-    assert(MemoRegistry.memoGet(memo, inflight, "fast")(2) == 2)
-    memo.synchronized(memo.remove("absent")): Unit
+    assert(memo(spark, "fast")(2) == 2)
+    memo.evict(spark)
     val heldMs = (System.nanoTime() - t0) / 1e6
     assert(heldMs < 1000, s"blocked ${heldMs}ms behind an unrelated build")
     release.countDown(); slow.join(10000)
-    assert(memo.synchronized(memo.get("slow")).contains(1))
+    // the build that overlapped the eviction still lands in the memo
+    assert(memo(spark, "slow")(sys.error("slow build was lost")) == 1)
+    // ...and the eviction did drop the entry that was already there
+    assert(memo(spark, "fast")(3) == 3)
   }
 
   test("a failing build propagates, cleans up, and allows retry") {
-    val (memo, inflight) = freshMaps()
+    val memo = fresh()
     val boom = intercept[RuntimeException] {
-      MemoRegistry.memoGet(memo, inflight, "k") {
+      memo(spark, "k") {
         throw new RuntimeException("boom")
       }: Unit
     }
     assert(boom.getMessage == "boom")
-    assert(inflight.isEmpty, "failed build left an in-flight entry")
-    assert(memo.synchronized(memo.get("k")).isEmpty)
-    // the key is not poisoned: the next call rebuilds
-    assert(MemoRegistry.memoGet(memo, inflight, "k")(7) == 7)
+    // the key is not poisoned: no failed future is left in flight and
+    // nothing was memoized, so the next call builds again
+    val builds = new AtomicInteger(0)
+    assert(memo(spark, "k") { builds.incrementAndGet(); 7 } == 7)
+    assert(builds.get() == 1)
   }
 
   test("waiters on a failing build are released, not hung") {
-    val (memo, inflight) = freshMaps()
+    val memo = fresh()
     val started = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     val failer = new Thread(() => {
-      try MemoRegistry.memoGet(memo, inflight, "k") {
+      try memo(spark, "k") {
         started.countDown(); release.await(10, TimeUnit.SECONDS)
         throw new RuntimeException("boom")
       }: Unit
@@ -89,7 +91,7 @@ class MemoGetSpec extends AnyFunSuite {
     assert(started.await(5, TimeUnit.SECONDS))
     val waiterErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val waiter = new Thread(() => {
-      try MemoRegistry.memoGet(memo, inflight, "k")(99): Unit
+      try memo(spark, "k")(99): Unit
       catch { case t: Throwable => waiterErr.set(t) }
     })
     waiter.start()

@@ -43,14 +43,23 @@ class StructureConverterSpec extends SparkSpec {
   }
 
   test("a custom converter plugs in without pipeline changes") {
-    object Upper extends StructureConverter {
+    class Upper extends StructureConverter {
       def inchiToSmiles(i: String): String =
         if (i == null) null else i.toUpperCase
       def smilesToInchi(s: String): String =
         if (s == null) null else s.toLowerCase
     }
-    val acts = Harmonize.brick(spark, sf(), Seq(EventsAdapter), Upper)
+    val (u1, u2) = (new Upper, new Upper)
+    val acts = Harmonize.brick(spark, sf(), Seq(EventsAdapter), u1)
       .activities
     assert(acts.filter(col("smiles") =!= upper(col("inchi"))).count() == 0)
+    // the brick memo keys on the converter instance: two instances of
+    // one class get their own bricks, the same instance gets its own back
+    def cached(c: StructureConverter) =
+      Harmonize.cachedBrick(spark, sf(), Seq(EventsAdapter), c).activities
+    val b1 = cached(u1)
+    assert(cached(u2) ne b1)
+    assert(cached(u1) eq b1)
+    Harmonize.evict(spark)
   }
 }
