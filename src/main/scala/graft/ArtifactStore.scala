@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.MemoRegistry.SessionMemo
 
 /** Cross-session persistence for expensive on-disk index artifacts
   * (VERDICT r9 #7): a content-keyed directory plus an atomic-rename
@@ -40,27 +42,33 @@ import org.apache.spark.sql.functions._
   * The content key must fingerprint everything the artifact derives
   * from — input data AND the build recipe version — so a data change
   * or semantics change lands in a fresh dir instead of silently
-  * reusing a stale one. [[corpusKey]] is the standard fingerprint:
-  * order-independent over rows and collision-hardened (xor alone
-  * cancels on crafted pairs; xor + sum-mod-2^64 + count requires
-  * breaking both folds at the same cardinality).
+  * reusing a stale one. [[tableKey]] is the standard key for an
+  * artifact derived from one table: the recipe plus a [[corpusKey]]
+  * fingerprint over every column, order-independent over rows and
+  * collision-hardened (xor alone cancels on crafted pairs; xor +
+  * sum-mod-2^64 + count requires breaking both folds at the same
+  * cardinality). [[dirKey]] keys artifacts derived from a whole input
+  * dir (stagings, the brick).
   *
   * Reclamation (ADVICE r10): nothing is deleted implicitly — eviction
-  * of a session memo only forgets the pointer, because another JVM
-  * may be mid-read. [[prune]] is the explicit GC: completed dirs
-  * whose `_OK` is older than a caller-chosen age (pick one comfortably
-  * beyond any session lifetime), plus crashed `.tmp-*` leftovers.
+  * of a session memo only releases the frames read back from a dir,
+  * because another JVM may be mid-read. [[prune]] is the explicit GC:
+  * completed dirs whose `_OK` is older than a caller-chosen age (pick
+  * one comfortably beyond any session lifetime), plus crashed `.tmp-*`
+  * leftovers.
   */
 object ArtifactStore {
   val DirKey = "spark.graft.artifact.dir"
 
   /** `spark.graft.artifact.enabled=false` opts a session out of
-    * cross-session hosting: the memoized builders (brick, stagings,
-    * candidate/PQ tables) fall back to their session-local
-    * checkpoint/persist form. For deployments that must not write
-    * shared state (scratch-disk-constrained probes, read-only bases) —
+    * hosting the DIR-derived artifacts: the brick and the adapter
+    * stagings fall back to their session-local checkpoint form. For
+    * probes that must not spend scratch disk on corpus-sized copies —
     * correctness is identical either way (the store only relocates
-    * WHERE a deterministic build materializes).
+    * WHERE a deterministic build materializes). The table-keyed
+    * artifacts ([[tableKey]]: Jaccard/candidate pairs, IVF and PQ
+    * tables, the ann14 and x24 indexes, the shortlist width) do not
+    * read this key and are hosted regardless.
     */
   val EnabledKey = "spark.graft.artifact.enabled"
 
@@ -142,8 +150,42 @@ object ArtifactStore {
     target.toString
   }
 
-  /** The standard content key: `recipe` (bump on any semantics change)
-    * + an order-independent fingerprint of `xxhash64(cols…)` over the
+  /** Reads an artifact back as frames: [[ensure]] the dir, building it
+    * with `write` on a miss, then read each named parquet `parts`
+    * subdir and persist it at `level`. The callers' builds are
+    * deterministic (content-derived ids, decimal-exact means,
+    * total-order tiebreaks, seeded samples), so a content-keyed dir
+    * holds the one valid result for its key: a second JVM, or this one
+    * after an eviction, reads the parts instead of re-running the
+    * build, and a lost publication race adopts bytes identical to its
+    * own. The frames belong to the caller's session memo, which
+    * releases them on eviction; the dir stays for [[prune]].
+    */
+  def frames(spark: SparkSession, name: String, key: String,
+      level: StorageLevel, parts: String*)(
+      write: String => Unit): Seq[DataFrame] = {
+    val dir = ensure(spark, name, key)(write)
+    parts.map(p => spark.read.parquet(s"$dir/$p").persist(level))
+  }
+
+  private val tableKeys = new SessionMemo[(String, String), String]()
+
+  /** Content key for an artifact derived from one input table:
+    * `recipe` (bump on any semantics change) + the [[corpusKey]]
+    * fingerprint over EVERY column of `Tables.t(spark, sfDir, table)`,
+    * so any data change to the table lands in a fresh dir. The
+    * fingerprint is one pass over the table, memoized per (session,
+    * sfDir, table): every artifact over the same table shares it.
+    */
+  def tableKey(spark: SparkSession, sfDir: String, table: String,
+      recipe: String): String =
+    recipe + "-" + tableKeys(spark, (sfDir, table)) {
+      val t = Tables.t(spark, sfDir, table)
+      corpusKey(t, "", t.columns.toSeq.map(col): _*)
+    }
+
+  /** The fingerprint behind [[tableKey]]: `recipe` + an
+    * order-independent fingerprint of `xxhash64(cols…)` over the
     * rows — bit_xor AND sum-mod-2^64 AND count (xor alone is a weak
     * multiset hash: any row-pair whose hashes cancel collides even at
     * equal counts; the sum fold breaks exactly those). One cheap

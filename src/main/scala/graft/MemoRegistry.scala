@@ -118,15 +118,12 @@ object MemoRegistry {
       val base = bases(
         Math.floorMod(ckptRoundRobin.getAndIncrement(), bases.length))
       val path = s"$base/ckpt-${java.util.UUID.randomUUID()}"
-      // zstd by default (`spark.graft.checkpoint.codec` overrides):
-      // handoffs are write-once/read-once I/O-bound artifacts, and the
-      // brick's canonical-JSON text compresses ~2× better under zstd
-      // than snappy — at the fourth decade the activities handoff
-      // alone is tens of GB, and the disk it occupies is the scratch
-      // space the next stage's shuffle needs (round-11 finding).
-      df.write.mode("overwrite")
-        .option("compression",
-          spark.conf.getOption(CkptCodecKey).getOrElse("zstd"))
+      // zstd: handoffs are write-once/read-once I/O-bound artifacts,
+      // and the brick's canonical-JSON text compresses ~2× better
+      // under zstd than snappy — at the fourth decade the activities
+      // handoff alone is tens of GB, and the disk it occupies is the
+      // scratch space the next stage's shuffle needs (round-11 finding).
+      df.write.mode("overwrite").option("compression", "zstd")
         .parquet(path)
       val out = spark.read.parquet(path)
       reliablePaths.put(out, path)
@@ -151,7 +148,6 @@ object MemoRegistry {
     */
   val CkptModeKey = "spark.graft.checkpoint.mode"
   val CkptDirKey = "spark.graft.checkpoint.dir"
-  val CkptCodecKey = "spark.graft.checkpoint.codec"
   private val ckptRoundRobin = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private val reliablePaths = java.util.Collections.synchronizedMap(
@@ -209,8 +205,8 @@ object MemoRegistry {
     *   - A build that overlaps an eviction of its own key lands in the
     *     map afterwards and is released at the next eviction.
     *   - `evict(spark)` drops that session's entries only and releases
-    *     `frames(v)` of each; a value that holds no frame (a store path,
-    *     a count, a driver-side matrix) is just forgotten.
+    *     `frames(v)` of each; a value that holds no frame (a table
+    *     fingerprint, a driver-side matrix) is just forgotten.
     * The memo registers its own `evict` for `evictAll` when constructed.
     */
   final class SessionMemo[K, V](

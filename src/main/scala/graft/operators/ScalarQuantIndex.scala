@@ -84,9 +84,9 @@ object ScalarQuantIndex {
     */
   private val memo = new SessionMemo[String, DataFrame](Seq(_))
 
-  def cachedDecoded(s: SparkSession, d: String, e: => DataFrame): DataFrame =
+  def cachedDecoded(s: SparkSession, d: String): DataFrame =
     memo(s, d) {
-      val (stats, codes) = build(e)
+      val (stats, codes) = build(graft.Tables.embeddings(s, d))
       reconstruct(codes, stats).coalesce(4).localCheckpoint()
     }
 

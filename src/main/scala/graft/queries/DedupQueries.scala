@@ -45,25 +45,20 @@ object DedupQueries extends QueryModule {
 
   /** Jaccard pair frame shared by dd2 (census) and dd6 (materialize),
     * plus the component family (dd8/dd9/dd11/c1/c6/c7) through
-    * [[cachedComponents]]. CROSS-SESSION (VERDICT r10 #4): the banded
-    * candidate generation + exact-Jaccard verify is deterministic, so
-    * the pair frame persists in a corpus-keyed ArtifactStore dir —
-    * the shingle explode and band joins run once per machine, not per
-    * JVM.
+    * [[cachedComponents]]. Store-hosted: the shingle explode and band
+    * joins run once per machine, not per JVM.
     */
   private[queries] def cachedJaccard(s: SparkSession, d: String): DataFrame =
     jMemo(s, d) {
-      val key = graft.ArtifactStore.corpusKey(Tables.documents(s, d),
-        "jaccard-v1", col("doc_id"), col("text"))
-      val dir = graft.ArtifactStore.ensure(s, "jaccard", key) { tmp =>
-        Dedup.jaccardPairs(cachedShingles(s, d))
+      graft.ArtifactStore.frames(s, "jaccard",
+        graft.ArtifactStore.tableKey(s, d, "documents", "jaccard-v1"),
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, "pairs") {
+        tmp => Dedup.jaccardPairs(cachedShingles(s, d))
           .write.parquet(s"$tmp/pairs")
-      }
-      s.read.parquet(s"$dir/pairs")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.head
     }
 
-  /** Candidate-pair indexes, materialized once per session: an LSH /
+  /** Candidate-pair indexes, store-hosted like the Jaccard frame: an LSH /
     * SimHash index is a build-once-query-many artifact (signatures +
     * banding are the expensive part; at corpus scale they'd be written
     * alongside the data, like the persisted IVF assignment in
@@ -75,17 +70,11 @@ object DedupQueries extends QueryModule {
   private def cachedCandidates(s: SparkSession, d: String, kind: String)
       (build: => DataFrame): DataFrame =
     candMemo(s, (d, kind)) {
-      // CROSS-SESSION (VERDICT r10 #4): signature + banding builds
-      // are deterministic functions of the documents table — the
-      // candidate tables persist in corpus-keyed store dirs like the
-      // Jaccard frame.
-      val key = graft.ArtifactStore.corpusKey(Tables.documents(s, d),
-        s"cand-$kind-v1", col("doc_id"), col("text"))
-      val dir = graft.ArtifactStore.ensure(s, s"cand-$kind", key) {
+      graft.ArtifactStore.frames(s, s"cand-$kind",
+        graft.ArtifactStore.tableKey(s, d, "documents", s"cand-$kind-v1"),
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, "pairs") {
         tmp => build.write.parquet(s"$tmp/pairs")
-      }
-      s.read.parquet(s"$dir/pairs")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.head
     }
 
   /** Connected components of the J>=0.5 near-dup graph, shared by the

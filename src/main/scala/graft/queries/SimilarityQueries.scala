@@ -249,7 +249,7 @@ object SimilarityQueries extends QueryModule {
       // (quantize once per (session, sfDir), search many — the ann9
       // pattern); the oracle still replays quantize+decode end-to-end.
       val e = Tables.embeddings(s, d)
-      val rvec = graft.operators.ScalarQuantIndex.cachedDecoded(s, d, e)
+      val rvec = graft.operators.ScalarQuantIndex.cachedDecoded(s, d)
       val quant = rvec.join(e, Seq("vec_id"))
 
       val q = quant.filter(col("vec_id") < 10)
@@ -318,7 +318,7 @@ object SimilarityQueries extends QueryModule {
       // production shape (the dd3/dd4 candidate-index pattern).
       val pqE = Tables.embeddings(s, d)
       val (pqBooks, pqCodes) =
-        graft.operators.ProductQuantIndex.cached(s, d, pqE)
+        graft.operators.ProductQuantIndex.cached(s, d)
       val approx = graft.operators.ProductQuantIndex.searchFrames(
         pqBooks, pqCodes, pqE, col("vec_id") < 10, 3)
 
@@ -361,7 +361,7 @@ object SimilarityQueries extends QueryModule {
         .filter(col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"))
       val (books, codes) =
-        graft.operators.ProductQuantIndex.cached(s, d, e)
+        graft.operators.ProductQuantIndex.cached(s, d)
       val approx = graft.operators.ProductQuantIndex.searchCandidates(
         books, codes, e, col("vec_id") < 10, cands, 3)
       val exact3 = exactTop3Audit(e, col("vec_id") < 10)
@@ -409,7 +409,7 @@ object SimilarityQueries extends QueryModule {
         .filter(col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"))
       val (books, codes) =
-        graft.operators.ProductQuantIndex.cached(s, d, e)
+        graft.operators.ProductQuantIndex.cached(s, d)
       val shortlist = graft.operators.ProductQuantIndex.searchCandidates(
         books, codes, e, col("vec_id") < 10, cands, rShort)
       val wr = Window.partitionBy(col("query_id"))
@@ -695,18 +695,6 @@ object SimilarityQueries extends QueryModule {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  /** The corpus content key shared by this module's store-hosted
-    * artifacts (assignment, PQ variants already key independently):
-    * one fingerprint pass per (session, sfDir), memoized.
-    */
-  private val embKeyMemo = new SessionMemo[String, String]()
-
-  private def embKey(s: SparkSession, d: String, recipe: String): String =
-    recipe + "-" + embKeyMemo(s, d) {
-      graft.ArtifactStore.corpusKey(Tables.embeddings(s, d), "",
-        col("vec_id"), col("embedding"), col("label"))
-    }
-
   private val assignMemo = new SessionMemo[String, DataFrame](Seq(_))
 
   /** Every vector with its nearest-centroid list id, memoized + persisted
@@ -724,22 +712,19 @@ object SimilarityQueries extends QueryModule {
   private def cachedAssigned(s: SparkSession, d: String): DataFrame =
     assignMemo(s, d) {
       GraftFunctions.register(s)
-      // CROSS-SESSION (VERDICT r10 #4): the IVF assignment is the
-      // expensive deterministic scoring pass ann4/5/11/12/13 all
-      // ride — store-hosted like the PQ artifacts.
-      // Recipe bumped v1→v2 with the fused swap: output is
-      // bit-identical, but a stale-artifact reuse must not mask the
-      // new build path.
-      val dir = graft.ArtifactStore.ensure(s, "ivf-assigned",
-        embKey(s, d, "assigned-v2")) { tmp =>
+      // the expensive scoring pass ann4/5/11/12/13 all ride. Recipe
+      // bumped v1→v2 with the fused swap: output is bit-identical, but
+      // a stale-artifact reuse must not mask the new build path.
+      graft.ArtifactStore.frames(s, "ivf-assigned",
+        graft.ArtifactStore.tableKey(s, d, "embeddings", "assigned-v2"),
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+        "assigned") { tmp =>
         graft.operators.KMeans.assignFused(
             Tables.embeddings(s, d), centroidMatrix(s, d), "embedding")
           .select(col("vec_id"), col("label"), col("embedding"),
             col("cid").as("list_id"))
           .write.parquet(s"$tmp/assigned")
-      }
-      s.read.parquet(s"$dir/assigned")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.head
     }
 
   private val centMatMemo =
@@ -759,57 +744,36 @@ object SimilarityQueries extends QueryModule {
         centroids(s, d).select(col("clabel").as("cid"), col("cv")))
     }
 
-  // the ann14 artifact is content-keyed and SHARED ACROSS SESSIONS
-  // (ArtifactStore) — eviction forgets this session's pointer but
-  // never deletes the dir: another JVM may be reading it, and the
-  // whole point of the store is that the next session reuses it.
-  // Reclamation is ArtifactStore.prune (ADVICE r10) — an explicit
-  // age-gated GC the operator runs, never an implicit eviction.
-  private val idxMemo = new SessionMemo[String, String]()
-
   /** ann14's on-disk IVF-PQ artifact: write from the base corpus
     * (vec_id % 10 ≠ 7), then append the held-out slice twice — the
     * second append MUST be a no-op (per-leg anti-joins); the query's
-    * count audit and search rows face the oracle either way.
-    * CROSS-SESSION persistent (VERDICT r9 #7): the build is
-    * deterministic end-to-end, so the artifact lives under a
-    * content-keyed [[graft.ArtifactStore]] dir — one corpus
-    * fingerprint scan (order-independent xor of per-row hashes,
-    * far cheaper than the N×k build it saves) decides reuse vs
-    * rebuild, the atomic-rename protocol arbitrates concurrent
-    * sessions, and a data change or recipe bump lands in a fresh dir.
-    * The session memo remains on top so one JVM fingerprints once.
+    * count audit and search rows face the oracle either way. The
+    * query reads the index by path, so the dir itself is the value: a
+    * published dir costs two `exists` checks and an owner check.
     */
   private val Ann14Recipe = "v1-mod10ne7-labelmean"
   private def lifecycleArtifact(s: SparkSession, d: String): String =
-    idxMemo(s, d) {
-      GraftFunctions.register(s)
+    graft.ArtifactStore.ensure(s, "ann14-ivfpq",
+      graft.ArtifactStore.tableKey(s, d, "embeddings", Ann14Recipe)) { dir =>
       val e = Tables.embeddings(s, d)
-      // ArtifactStore.corpusKey via embKey (ADVICE r10): xor +
-      // sum-mod-2^64 + count (xor alone cancels on crafted row pairs),
-      // failing loudly on an empty corpus instead of NPE-ing on the
-      // null aggregate; the fingerprint scan is shared module-wide
-      graft.ArtifactStore.ensure(s, "ann14-ivfpq",
-        embKey(s, d, Ann14Recipe)) { dir =>
-        val isDelta = col("vec_id") % 10 === 7
-        val base = e.filter(!isDelta)
-        // base label-mean coarse quantizer — the centroids(s,d)
-        // construction restricted to the base corpus (decimal-exact
-        // positional means, the exact formulation the oracle replays)
-        val coarse = base
-          .select(col("label"), posexplode(col("embedding")))
-          .groupBy(col("label"), col("pos"))
-          .agg((sum(col("col").cast(org.apache.spark.sql.types
-            .DecimalType(27, 12))).cast("double") / count(lit(1))).as("c"))
-          .groupBy(col("label"))
-          .agg(expr("transform(sort_array(collect_list(struct(pos, c))), " +
-            "x -> x.c)").as("cv"))
-          .select(col("label").as("cid"), col("cv"))
-        graft.operators.IvfPqIndex.write(base, dir, coarse)
-        graft.operators.IvfPqIndex.append(e.filter(isDelta), dir)
-        // the retry path, exercised IN the gate: identical re-append
-        graft.operators.IvfPqIndex.append(e.filter(isDelta), dir)
-      }
+      val isDelta = col("vec_id") % 10 === 7
+      val base = e.filter(!isDelta)
+      // base label-mean coarse quantizer — the centroids(s,d)
+      // construction restricted to the base corpus (decimal-exact
+      // positional means, the exact formulation the oracle replays)
+      val coarse = base
+        .select(col("label"), posexplode(col("embedding")))
+        .groupBy(col("label"), col("pos"))
+        .agg((sum(col("col").cast(org.apache.spark.sql.types
+          .DecimalType(27, 12))).cast("double") / count(lit(1))).as("c"))
+        .groupBy(col("label"))
+        .agg(expr("transform(sort_array(collect_list(struct(pos, c))), " +
+          "x -> x.c)").as("cv"))
+        .select(col("label").as("cid"), col("cv"))
+      graft.operators.IvfPqIndex.write(base, dir, coarse)
+      graft.operators.IvfPqIndex.append(e.filter(isDelta), dir)
+      // the retry path, exercised IN the gate: identical re-append
+      graft.operators.IvfPqIndex.append(e.filter(isDelta), dir)
     }
 
   /** ann13's derived shortlist width (VERDICT r10 #6, widened to
@@ -826,32 +790,24 @@ object SimilarityQueries extends QueryModule {
     * original's neighbors enter — BENCH_LOCAL third-decade recall
     * rows). On a twin-free corpus every component is trivial and R
     * lands on the floor 10, which is what keeps the oracle's literal
-    * rank-10 cut exact at the gate scales. Memoized per
-    * (session, sfDir) — the census is a multi-job build (pairs +
-    * component propagation) and must run once.
+    * rank-10 cut exact at the gate scales. The census is a multi-job
+    * build (pair scan + component propagation), so the resolved R is
+    * store-hosted as a one-line artifact: a published dir costs an
+    * integer read instead of the ~N²/lists pair leg.
     */
-  private val rShortMemo = new SessionMemo[String, Int]()
-
-  private def shortlistWidth(s: SparkSession, d: String): Int =
-    rShortMemo(s, d) {
-      // CROSS-SESSION (VERDICT r14 #4): the census chain below (pair
-      // scan + components) is the expensive part and is deterministic
-      // end-to-end (seeded blocking, min-id components, the shortlistR
-      // formula), so the resolved R is store-hosted as a one-line
-      // artifact — a warm-store session reads an integer instead of
-      // re-running the ~N²/lists pair leg.
-      val dir = graft.ArtifactStore.ensure(s, "shortr",
-        embKey(s, d, "shortr-v1")) { tmp =>
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(tmp)): Unit
-        java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "R"),
-          computeShortlistWidth(s, d).toString
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-      }
-      new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(dir, "R")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt
+  private def shortlistWidth(s: SparkSession, d: String): Int = {
+    val dir = graft.ArtifactStore.ensure(s, "shortr",
+      graft.ArtifactStore.tableKey(s, d, "embeddings", "shortr-v1")) { tmp =>
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(tmp)): Unit
+      java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "R"),
+        computeShortlistWidth(s, d).toString
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
     }
+    new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "R")),
+      java.nio.charset.StandardCharsets.UTF_8).trim.toInt
+  }
 
   private def computeShortlistWidth(s: SparkSession, d: String): Int =
     locally {
@@ -912,14 +868,12 @@ object SimilarityQueries extends QueryModule {
   private def cachedResidualPq(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
     resMemo(s, d) {
-      // CROSS-SESSION (VERDICT r10 #4): residual codebook training is
-      // deterministic end-to-end (decimal-exact centroids, seeded
-      // slices, total-order tiebreaks) — same store treatment as the
-      // plain PQ artifact
-      val emb = Tables.embeddings(s, d)
-      val dir = graft.ArtifactStore.ensure(s, "respq",
-        embKey(s, d, "respq-v1")) { tmp =>
-        val nvd = graft.operators.ScalarQuantIndex.normalizedScalar(emb)
+      val Seq(books, codes) = graft.ArtifactStore.frames(s, "respq",
+        graft.ArtifactStore.tableKey(s, d, "embeddings", "respq-v1"),
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER,
+        "codebooks", "codes") { tmp =>
+        val nvd = graft.operators.ScalarQuantIndex
+          .normalizedScalar(Tables.embeddings(s, d))
         val centScalar = centroids(s, d)
           .select(col("clabel"),
             posexplode(col("cv")).as(Seq("pos", "cval")))
@@ -935,9 +889,7 @@ object SimilarityQueries extends QueryModule {
         codes.write.parquet(s"$tmp/codes")
         Seq(books, codes).foreach(graft.MemoRegistry.release)
       }
-      (s.read.parquet(s"$dir/codebooks"),
-        s.read.parquet(s"$dir/codes").persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+      (books, codes)
     }
 
   private val refinedMemo = new SessionMemo[String, DataFrame](Seq(_))
@@ -1009,13 +961,10 @@ object SimilarityQueries extends QueryModule {
       nVec: Long): DataFrame =
     refinedMemo(s, d) {
       GraftFunctions.register(s)
-      // CROSS-SESSION (VERDICT r14 #4): the blocking is deterministic
-      // end-to-end (seeded hash-min init, seeded training sample, one
-      // fused Lloyd round, total-order ties), so the probes table is
-      // store-hosted like the assignment/PQ artifacts — a warm-store
-      // session reads N×2 narrow rows instead of re-training.
-      val dir = graft.ArtifactStore.ensure(s, "refined-probes",
-        embKey(s, d, "refined-v1")) { tmp =>
+      graft.ArtifactStore.frames(s, "refined-probes",
+        graft.ArtifactStore.tableKey(s, d, "embeddings", "refined-v1"),
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+        "probes") { tmp =>
         val e = Tables.embeddings(s, d)
         val k = math.ceil(math.sqrt(10.0 * nVec)).toInt
         val init = graft.operators.KMeans
@@ -1036,9 +985,7 @@ object SimilarityQueries extends QueryModule {
             cents, "embedding", 2)
           .select(col("vec_id"), col("cid").as("list_id"), col("rk"))
           .write.parquet(s"$tmp/probes")
-      }
-      s.read.parquet(s"$dir/probes")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.head
     }
 
   /** Per-subspace CTE block for the ann9 oracle: slice → init → one

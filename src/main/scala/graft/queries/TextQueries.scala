@@ -831,38 +831,21 @@ object TextQueries extends QueryModule {
   // pre-v5 artifact fails the readSpans loud gate
   private val Wx24Recipe = "x24-v5-mod3split"
 
-  // the artifact is shared across sessions — eviction forgets this
-  // session's pointer only (ArtifactStore.prune is the GC)
-  private val wiMemo = new SessionMemo[String, String]()
-
-  /** The documents-corpus content key shared by this module's
-    * store-hosted artifacts and win5's artifact adoption: one
-    * fingerprint pass per (session, sfDir), memoized.
-    */
-  private val docKeyMemo = new SessionMemo[String, String]()
-
-  private def docKey(s: org.apache.spark.sql.SparkSession, d: String,
-      recipe: String): String =
-    recipe + "-" + docKeyMemo(s, d) {
-      graft.ArtifactStore.corpusKey(Tables.documents(s, d), "",
-        col("doc_id"), col("text"), col("lang"), col("source"))
-    }
-
+  // readers open the index by path, so the dir itself is the value: a
+  // published dir costs two `exists` checks and an owner check
   private def windowIndexArtifact(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    wiMemo(s, d) {
+    graft.ArtifactStore.ensure(s, "x24-winidx",
+      graft.ArtifactStore.tableKey(s, d, "documents", Wx24Recipe)) { dir =>
       val docs = Tables.documents(s, d)
-      graft.ArtifactStore.ensure(s, "x24-winidx",
-        docKey(s, d, Wx24Recipe)) { dir =>
-        val idx = s"$dir/idx"
-        val delta = docs.filter(col("doc_id") % 3 === 0)
-        graft.operators.WindowIndex.write(
-          docs.filter(col("doc_id") % 3 =!= 0), idx)
-        graft.operators.WindowIndex.append(delta, idx)
-        // the retry path, exercised IN the gate: identical re-append
-        graft.operators.WindowIndex.append(delta, idx)
-      } + "/idx"
-    }
+      val idx = s"$dir/idx"
+      val delta = docs.filter(col("doc_id") % 3 === 0)
+      graft.operators.WindowIndex.write(
+        docs.filter(col("doc_id") % 3 =!= 0), idx)
+      graft.operators.WindowIndex.append(delta, idx)
+      // the retry path, exercised IN the gate: identical re-append
+      graft.operators.WindowIndex.append(delta, idx)
+    } + "/idx"
 
   /** Word-5-gram window frame, read by x21/x23/x24 (since round 15
     * x18 answers from docstats+dupc and x20/x22 from the spans table —

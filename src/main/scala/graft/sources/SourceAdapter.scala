@@ -87,32 +87,25 @@ object SourceAdapter {
           graft.MemoRegistry.checkpointLarge(t.properties),
           graft.MemoRegistry.checkpointLarge(t.activities))
       } else {
-      // CROSS-SESSION (VERDICT r10 #4, the staging tier): every
-      // adapter's staging is a deterministic function of the source
-      // dir (the REST/JDBC shapes run against deterministic stubs in
-      // this sandbox; on a live deployment those two adapters would
-      // key on their upstream snapshot instead), so the triplet lives
-      // in a content-keyed ArtifactStore dir — after the brick became
-      // an artifact, the h7–h16 staging queries were the cold pass's
-      // largest remaining block (~55s of multi-window staging
-      // pipelines rebuilt per JVM).
-      val akey = graft.ArtifactStore.dirKey(spark, sfDir,
-        s"staging-v1-${a.name}")
-      val dir = graft.ArtifactStore.ensure(spark, s"staging-${a.name}",
-        akey) { tmp =>
-        val t = a.staging(spark, sfDir)
-        t.substances.write.parquet(s"$tmp/substances")
-        t.properties.write.parquet(s"$tmp/properties")
-        t.activities.write.parquet(s"$tmp/activities")
-      }
-      // serialized blocks on the read-backs: 14 resident triplets are
-      // the biggest storage tenant in a macro run, and their footprint
-      // is what starves the downstream assembly's execution memory.
-      // (Parquet leaves also keep the brick's analysis cheap — the
-      // checkpoint-vs-lineage planning note above holds unchanged.)
-      def rd(n: String) = spark.read.parquet(s"$dir/$n").persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      StagingTriplet(rd("substances"), rd("properties"), rd("activities"))
+        // the staging is keyed on the source dir (the REST/JDBC shapes
+        // run against deterministic stubs here; on a live deployment
+        // those two adapters would key on their upstream snapshot
+        // instead). Serialized blocks on the read-backs: 14 resident
+        // triplets are the biggest storage tenant in a macro run, and
+        // their footprint is what starves the downstream assembly's
+        // execution memory. (Parquet leaves also keep the brick's
+        // analysis cheap — the checkpoint-vs-lineage note above holds.)
+        val Seq(subs, props, acts) = graft.ArtifactStore.frames(spark,
+          s"staging-${a.name}",
+          graft.ArtifactStore.dirKey(spark, sfDir, s"staging-v1-${a.name}"),
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER,
+          "substances", "properties", "activities") { tmp =>
+          val t = a.staging(spark, sfDir)
+          t.substances.write.parquet(s"$tmp/substances")
+          t.properties.write.parquet(s"$tmp/properties")
+          t.activities.write.parquet(s"$tmp/activities")
+        }
+        StagingTriplet(subs, props, acts)
       }
     }
 }

@@ -12,6 +12,9 @@ import graft.sources.{EventsAdapter, OrdersAdapter, SourceAdapter}
   * build adds no new artifact dirs and returns identical frames. (The
   * bit-identical rebuild-after-evict guarantee itself is
   * MemoEvictionSpec's; this spec pins the reuse path specifically.)
+  * The table-keyed artifacts (Jaccard/candidate pairs, the window
+  * index, the IVF assignment) are pinned the same way, plus the one
+  * fingerprint they share per input table.
   */
 class ArtifactReuseSpec extends SparkSpec {
 
@@ -50,6 +53,42 @@ class ArtifactReuseSpec extends SparkSpec {
         .cachedStaging(EventsAdapter, spark, sf()).activities) == t1)
       assert(artifactDirs(base) == dirs1,
         "rebuild created new artifact dirs instead of adopting")
+    } finally {
+      spark.conf.unset(ArtifactStore.DirKey)
+      MemoRegistry.evictAll(spark)
+      org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(base))
+    }
+  }
+
+  test("corpus-keyed artifacts adopt the store dir and share one " +
+    "fingerprint per table") {
+    val base = Files.createTempDirectory("graft-tablekey").toString
+    spark.conf.set(ArtifactStore.DirKey, base)
+    try {
+      MemoRegistry.evictAll(spark)
+      val queries = Seq("dd2_ngram_jaccard", "dd3_minhash_lsh",
+        "x24_window_index_lifecycle", "ann5_ivf_topk")
+      def run(): Seq[Seq[String]] =
+        queries.map(q => sortedRows(SparkEntry.queries(q)(spark, sf())))
+      val rows1 = run()
+      val dirs1 = artifactDirs(base)
+      def dir(prefix: String): String = {
+        val hits = dirs1.filter(_.startsWith(prefix))
+        assert(hits.size == 1, s"$prefix: $dirs1")
+        hits.head
+      }
+      val docDirs = Seq("jaccard-", "cand-minhash-", "x24-winidx-").map(dir)
+      dir("ivf-assigned-")
+      // a content key ends in the table fingerprint <xor>-<sum>-<count>:
+      // every artifact over `documents` must carry the same one
+      val fingerprints = docDirs.map(_.split('-').takeRight(3).toSeq)
+      assert(fingerprints.distinct.size == 1, docDirs)
+
+      MemoRegistry.evictAll(spark)
+      assert(run() == rows1)
+      assert(artifactDirs(base) == dirs1,
+        "rerun created new artifact dirs instead of adopting")
     } finally {
       spark.conf.unset(ArtifactStore.DirKey)
       MemoRegistry.evictAll(spark)

@@ -48,7 +48,7 @@ class MemoEvictionSpec extends SparkSpec {
     def memoized() = (
       Harmonize.cachedBrick(spark, d, SourceAdapter.all).activities,
       SourceAdapter.cachedStaging(EventsAdapter, spark, d).activities,
-      ProductQuantIndex.cached(spark, d, Tables.embeddings(spark, d))._2)
+      ProductQuantIndex.cached(spark, d)._2)
     // evicting through a DIFFERENT session must not drop this one's
     // memos: each frame is still served from storage (same object
     // identity), whether the other session evicts one memo or all
