@@ -32,10 +32,19 @@ object GraftSession {
     * working levers are serialized checkpoint blocks for fact-scale
     * memos — MemoRegistry.checkpointLarge — and a heap sized to the
     * data for single-JVM macro runs; see BENCH_LOCAL.md round 7.)
+    *
+    * The generated-code cache holds 2000 classes instead of Spark's
+    * 100: one pass of six session queries (q1, j1, h10, x24, dd3, ann5)
+    * already generates about 110, so at the default a warm pass evicts
+    * and recompiles its own classes (measured 2.8 s against 2.1 s per
+    * pass on 4 cores). The cache is JVM-wide and sized once, at the
+    * JVM's first code generation, from the active session's conf; so
+    * the setting holds when this session is the JVM's first.
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   /** Local session sized for this machine — Verify/Bench/Explain use it. */
   def local(cpus: String, appName: String = "graft"): SparkSession = {

@@ -90,8 +90,7 @@ object Harmonize {
         // file per bucket per slice (guide §6 small files: v1 left
         // ~94 task-files per bucket). `spark.graft.assembly.slices`
         // only changes how many adapter slices the build deals.
-        val buckets = spark.conf.getOption(BrickBucketsKey)
-          .map(_.toInt).getOrElse(32)
+        val buckets = brickBuckets(spark)
         val bkey = graft.ArtifactStore.dirKey(spark, sfDir,
           s"brickb-v2-$buckets-" + names)
         val slices = spark.conf.getOption(SlicesKey)
@@ -255,12 +254,19 @@ object Harmonize {
     */
   val SlicesKey = "spark.graft.assembly.slices"
 
-  /** Conf: bucket count for the hosted brick's catalog layout. Default
-    * 32 (= the local core count, so gate-scale scans keep full
-    * parallelism); a cluster sizes it so each bucket's activities
-    * slice fits an executor — the writeBrickBucketedFiles guidance.
+  /** Bucket count of the hosted brick: the building session's
+    * `spark.sql.shuffle.partitions` (the core count under
+    * `GraftSession.local`). A bucket scan then runs one task per
+    * partition the session's shuffles use, so the brick side and the
+    * shuffled side of a join come out with the same partition count,
+    * and a 4-core session does not pay a 32-task stage over a few
+    * hundred rows. A cluster sizes shuffle partitions so each bucket's
+    * activities slice fits an executor. The count is part of the
+    * `brickb-` key, so sessions of different widths publish different
+    * dirs and never read mismatched bucket files.
     */
-  val BrickBucketsKey = "spark.graft.brick.buckets"
+  def brickBuckets(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** Deal `adapters` into `k` slices round-robin (adjacent heavy
     * sources land in different slices); order within a slice follows

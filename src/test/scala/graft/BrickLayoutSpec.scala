@@ -8,7 +8,8 @@ import graft.sources.{Catalog, SourceAdapter}
 /** The bucketed brick layout over the full EIGHT-source brick: written
   * once via Catalog.writeBrickBucketedFiles, adopted via
   * registerBrickBucketedFiles, downstream sid-joins run with zero
-  * shuffle exchange.
+  * shuffle exchange. The hosted brick takes its bucket count from the
+  * building session's shuffle partitions.
   */
 class BrickLayoutSpec extends SparkSpec {
 
@@ -88,5 +89,65 @@ class BrickLayoutSpec extends SparkSpec {
       plain.activities.exceptAll(brick.activities).isEmpty)
     assert(brick.substances.exceptAll(plain.substances).isEmpty)
     assert(brick.properties.exceptAll(plain.properties).isEmpty)
+  }
+
+  test("the hosted brick has one bucket per shuffle partition of its session") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    val base = Files.createTempDirectory("graft-brick-width").toString
+    val narrow = spark.newSession()
+    val adapters = Seq(graft.sources.EventsAdapter,
+      graft.sources.OrdersAdapter)
+    def brickDirs: Set[String] = new java.io.File(base).list().toSet
+      .filter(_.startsWith("brick"))
+    // bucket ids in a table's files, and its catalog CLUSTERED BY count
+    def fileBuckets(dir: String, table: String): Set[Int] =
+      new java.io.File(s"$base/$dir/$table").list().toSeq
+        .filter(_.endsWith(".parquet")).map { f =>
+          val id = BucketingUtils.getBucketId(f)
+          assert(id.isDefined, f); id.get
+        }.toSet
+    def catalogBuckets(dir: String, table: String): Option[Int] = {
+      val cat = spark.sessionState.catalog
+      def canon(f: java.io.File) = f.getCanonicalPath
+      val loc = canon(new java.io.File(s"$base/$dir/$table"))
+      val tables = cat.listTables("graft_brick")
+        .map(t => cat.getTableMetadata(TableIdentifier(t.table, t.database)))
+      val hits = tables
+        .filter(t => canon(new java.io.File(t.location)) == loc)
+      assert(hits.size == 1, s"$loc: " + tables.map(_.location))
+      hits.head.bucketSpec.map(_.numBuckets)
+    }
+    def checkWidth(dir: String, n: Int): Unit =
+      Seq("substances", "properties", "activities").foreach { t =>
+        assert(fileBuckets(dir, t) == (0 until n).toSet, s"$t in $dir")
+        assert(catalogBuckets(dir, t).contains(n), s"$t in $dir")
+      }
+    try {
+      Seq(spark, narrow).foreach { s =>
+        s.conf.set(ArtifactStore.DirKey, base)
+        MemoRegistry.evictAll(s)
+      }
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+      Harmonize.cachedBrick(spark, sf(), adapters).activities.count()
+      val wide = brickDirs
+      assert(wide.size == 1 && wide.head.startsWith("brickb-"), wide)
+      checkWidth(wide.head, 4)
+
+      // another width keys another dir; the 4-bucket one is untouched
+      narrow.conf.set("spark.sql.shuffle.partitions", "3")
+      Harmonize.cachedBrick(narrow, sf(), adapters).activities.count()
+      val added = brickDirs -- wide
+      assert(brickDirs.size == 2 && added.size == 1 &&
+        added.head.startsWith("brickb-"), brickDirs)
+      checkWidth(added.head, 3)
+      checkWidth(wide.head, 4)
+    } finally {
+      Seq(spark, narrow).foreach { s =>
+        MemoRegistry.evictAll(s)
+        s.conf.unset(ArtifactStore.DirKey)
+      }
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+    }
   }
 }

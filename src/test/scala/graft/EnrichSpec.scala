@@ -61,11 +61,14 @@ class EnrichSpec extends SparkSpec {
 
   test("a stochastic labeler that recovers within maxAttempts succeeds") {
     val dir = Files.createTempDirectory("graft-vocab2").toString + "/cache"
-    // first call per property drifts out of vocabulary, retry lands in it
+    // first call per property JSON drifts out of vocabulary, the retry
+    // lands in it; the drift set lives in the companion object, so the
+    // labeler copies the tasks deserialize all record into it
+    val drifted = EnrichSpec.drifted
+    drifted.clear()
     val flaky = new Enrich.Labeler {
-      private val seen = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
       def label(j: String): Seq[(String, String, Double)] =
-        if (seen.putIfAbsent(j, true) == null)
+        if (EnrichSpec.drifted.add(j))
           Seq(("hallucinated", "first attempt", 0.0))
         else Enrich.RuleLabeler.label(j)
     }
@@ -74,6 +77,9 @@ class EnrichSpec extends SparkSpec {
     val cats = out.select("category").distinct().collect()
       .map(_.getString(0)).toSet
     assert(cats.subsetOf(Enrich.vocabulary))
+    // every labeled property's first attempt drifted and was retried
+    assert(drifted.size == props.select("data").distinct().count(),
+      drifted.size)
   }
 
   test("titles are globally unique and deterministic") {
@@ -137,4 +143,6 @@ class EnrichSpec extends SparkSpec {
 
 object EnrichSpec {
   val calls = new AtomicInteger(0)
+  val drifted: java.util.Set[String] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }

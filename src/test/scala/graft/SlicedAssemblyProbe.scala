@@ -16,7 +16,8 @@ import graft.sources.SourceAdapter
   *
   * `sbt "Test/runMain graft.SlicedAssemblyProbe [sfDir] [k] [outDir]
   * [buckets]"` — k defaults to one adapter per slice (the minimal-peak
-  * extreme), buckets to 32 (the hosted brick's default);
+  * extreme), buckets to the session's shuffle partitions (= cpus, the
+  * hosted brick's count, `Harmonize.brickBuckets`);
   * same env posture as AssemblyProfile: SPARK_GRAFT_CKPT_MODE=reliable,
   * SPARK_GRAFT_CKPT_DIR=<comma list>, SPARK_DRIVER_MEM, and
   * SPARK_LOCAL_DIRS weighting shuffle onto /dev/shm.
@@ -26,9 +27,10 @@ object SlicedAssemblyProbe {
     val d = args.headOption.getOrElse("/root/repo/target/sf30-stretch")
     val k = args.lift(1).map(_.toInt).getOrElse(SourceAdapter.all.size)
     val out = args.lift(2).getOrElse("/root/repo/target/sliced-brick")
-    val buckets = args.lift(3).map(_.toInt).getOrElse(32)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus, "sliced-assembly-probe")
+    val buckets = args.lift(3).map(_.toInt)
+      .getOrElse(Harmonize.brickBuckets(spark))
     spark.sparkContext.setLogLevel("ERROR")
     StretchGen.ensure(spark, d): Unit
     sys.env.get("SPARK_GRAFT_CKPT_MODE").foreach { m =>
