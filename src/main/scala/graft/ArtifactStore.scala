@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.MemoRegistry.SessionMemo
 
@@ -160,12 +161,40 @@ object ArtifactStore {
     * build, and a lost publication race adopts bytes identical to its
     * own. The frames belong to the caller's session memo, which
     * releases them on eviction; the dir stays for [[prune]].
+    * Each part is read by [[readParquet]], with no schema-inference job.
     */
   def frames(spark: SparkSession, name: String, key: String,
       level: StorageLevel, parts: String*)(
       write: String => Unit): Seq[DataFrame] = {
     val dir = ensure(spark, name, key)(write)
-    parts.map(p => spark.read.parquet(s"$dir/$p").persist(level))
+    parts.map(p => readParquet(spark, s"$dir/$p").persist(level))
+  }
+
+  /** `spark.read.parquet(dir)` without its schema-inference job. Spark's
+    * parquet writer records the frame's schema in every file's footer,
+    * and inference runs one Spark job to read that footer back; this
+    * reads the first file's footer on the driver and hands the schema to
+    * the reader, which makes every field nullable as inference does. A
+    * dir with no parquet file, or whose footer has no Spark schema, is
+    * inferred as usual.
+    */
+  private[graft] def readParquet(spark: SparkSession,
+      dir: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val written = p.getFileSystem(conf).listStatus(p).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).headOption
+      .flatMap { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        try Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(
+          org.apache.spark.sql.execution.datasources.parquet
+            .ParquetReadSupport.SPARK_METADATA_KEY))
+        finally r.close()
+      }
+    written.fold(spark.read)(json =>
+      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
+      .parquet(dir)
   }
 
   private val tableKeys = new SessionMemo[(String, String), String]()

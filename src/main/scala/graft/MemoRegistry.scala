@@ -192,6 +192,56 @@ object MemoRegistry {
     }
   }
 
+  /** Conf: the width of [[inParallel]], and so the bound on ALL of the
+    * brick build's concurrency: adapter stagings, each staging's three
+    * part writes, the three staging-union checkpoints and the three
+    * bucketed table writes. These are INDEPENDENT jobs: submitted one
+    * after another they leave the scheduler idle through every job's
+    * driver round-trips and single-task tail stages, and jobs from a
+    * small pool back-fill them. Default 4 — enough in-flight
+    * jobs to fill stage tails without thrashing the scheduler, at ANY
+    * core count (the pool bounds concurrent JOBS, not tasks; each job
+    * still fans out to every core). Nested sites multiply: four
+    * stagings each writing three parts can run twelve jobs at once.
+    * 1 restores the fully sequential schedule.
+    */
+  val StageThreadsKey = "spark.graft.staging.threads"
+
+  /** Run independent `thunks` (each typically one or more Spark jobs)
+    * concurrently, at most [[StageThreadsKey]] at a time, and return
+    * their results in input order — so a caller that unions or zips the
+    * results is byte-identical to the sequential schedule. The pool is
+    * created per call, from the calling thread: its threads inherit
+    * that thread's Spark local properties (job group, description, the
+    * active session), so their jobs are attributed exactly like the
+    * caller's own. Every thunk is waited for before the first failure
+    * (in input order) is rethrown as its own cause, never wrapped in an
+    * `ExecutionException`: a caller's cleanup — `ArtifactStore.ensure`
+    * deleting its `.tmp-*` dir — must not run while a sibling is still
+    * writing into it.
+    */
+  def inParallel[T](spark: SparkSession)(thunks: Seq[() => T]): Seq[T] = {
+    val n = math.min(spark.conf.getOption(StageThreadsKey)
+      .map(_.trim.toInt).getOrElse(4), thunks.size)
+    if (n <= 1) thunks.map(_())
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+      try {
+        val futs = thunks.map(t => pool.submit(
+          new java.util.concurrent.Callable[T] { def call(): T = t() }))
+        val outcomes = futs.map { f =>
+          try Right(f.get())
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              Left(e.getCause)
+          }
+        }
+        outcomes.collectFirst { case Left(t) => throw t }
+        outcomes.collect { case Right(v) => v }
+      } finally pool.shutdown()
+    }
+  }
+
   /** A session-scoped memo, `(SparkSession, K) → V`: every memoized
     * value in the engine that lives for one session is held in one of
     * these. The contract, for every memo:

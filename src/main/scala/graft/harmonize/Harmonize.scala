@@ -155,52 +155,18 @@ object Harmonize {
     }
   }
 
-  /** Conf: thread count for concurrent adapter staging inside the brick
-    * builds (guide §2.6 — the 13-14 stagings are INDEPENDENT multi-job
-    * pipelines that the pre-r16 sequential map serialized, leaving the
-    * scheduler idle through every staging's single-task tail stages;
-    * jobs submitted from a small pool back-fill those tails). Default 4
-    * — enough in-flight jobs to fill stage tails without thrashing the
-    * scheduler, at ANY core count (the pool bounds concurrent JOBS, not
-    * tasks; each job still fans out to every core). 1 restores the
-    * sequential behavior.
-    */
-  val StageThreadsKey = "spark.graft.staging.threads"
-
-  /** Stage `adapters` through the session memo, submitting independent
-    * stagings from a bounded pool so their jobs overlap (§2.6). Memo
-    * arbitration is unchanged — cachedStaging's per-key in-flight
+  /** Stage `adapters` through the session memo, the independent
+    * stagings overlapping through [[graft.MemoRegistry.inParallel]].
+    * Memo arbitration is unchanged — cachedStaging's per-key in-flight
     * futures elect one builder per adapter — and the returned order is
     * the input order, so every downstream union is byte-identical to
     * the sequential build.
     */
   private def stageAll(spark: SparkSession, sfDir: String,
       adapters: Seq[SourceAdapter])
-      : Seq[(String, graft.sources.StagingTriplet)] = {
-    val n = math.min(spark.conf.getOption(StageThreadsKey)
-      .map(_.toInt).getOrElse(4), adapters.size)
-    if (n <= 1)
-      adapters.map(a => a.name -> SourceAdapter.cachedStaging(a, spark, sfDir))
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-      try {
-        val futs = adapters.map { a =>
-          a.name -> pool.submit(new java.util.concurrent.Callable[
-            graft.sources.StagingTriplet] {
-            def call(): graft.sources.StagingTriplet =
-              SourceAdapter.cachedStaging(a, spark, sfDir)
-          })
-        }
-        futs.map { case (name, f) =>
-          name -> (try f.get()
-          catch { // surface the builder's own failure, not the wrapper
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          })
-        }
-      } finally pool.shutdown()
-    }
-  }
+      : Seq[(String, graft.sources.StagingTriplet)] =
+    graft.MemoRegistry.inParallel(spark)(adapters.map(a =>
+      () => a.name -> SourceAdapter.cachedStaging(a, spark, sfDir)))
 
   /** Catalyst-estimated bytes of a staged triplet set — planner-side
     * only (file-scan statistics or cached-block sizes), no job.
@@ -241,7 +207,9 @@ object Harmonize {
     try withScaledInitialPartitions(spark, stagedBytes(staged)) {
       val b = brickFromStaged(staged, converter,
         materialize = { df =>
-          val c = graft.MemoRegistry.checkpointLarge(df); inter += c; c })
+          val c = graft.MemoRegistry.checkpointLarge(df)
+          inter.synchronized { inter += c }; c
+        })
       Brick(graft.MemoRegistry.checkpointLarge(b.substances),
         graft.MemoRegistry.checkpointLarge(b.properties),
         graft.MemoRegistry.checkpointLarge(b.activities))
@@ -327,8 +295,13 @@ object Harmonize {
     * re-stage — a one-slice build keeps them, because h-family
     * consumers share the session memo) → append the three tables
     * (join/collapse shuffles W; peak U+W) → release U, GC so
-    * ContextCleaner reclaims W. Each slice's first-shot reducer width
-    * scales with ITS staged bytes. `instrument` receives one line per
+    * ContextCleaner reclaims W. The three unions and the three table
+    * writes each run concurrently ([[graft.MemoRegistry.inParallel]]),
+    * so W is the sum of all three tables' shuffles, not the largest
+    * one alone; the two dimension tables are small next to the fact
+    * table, so this adds little, and `spark.graft.staging.threads=1`
+    * restores the one-at-a-time peak. Each slice's first-shot reducer
+    * width scales with ITS staged bytes. `instrument` receives one line per
     * finished slice (SlicedAssemblyProbe's per-slice receipts).
     */
   def buildBrickBucketedTo(spark: SparkSession, sfDir: String,
@@ -356,7 +329,7 @@ object Harmonize {
               val b = brickFromStaged(staged, converter,
                 materialize = { df =>
                   val c = graft.MemoRegistry.checkpointLarge(df)
-                  inter += c; c
+                  inter.synchronized { inter += c }; c
                 })
               if (sliced) {
                 SourceAdapter.evict(spark)
@@ -412,7 +385,9 @@ object Harmonize {
     * declarative plan (streaming micro-batches), `_.localCheckpoint()`
     * for the memoized batch build where re-executing the canonicalize
     * scan per consumer would double the work. Output is identical
-    * either way — the hook only pins WHERE the shared subplan runs.
+    * either way — the hook only pins WHERE the shared subplan runs. The
+    * three calls run concurrently ([[graft.MemoRegistry.inParallel]]),
+    * so the hook must be thread-safe.
     */
   def brickFromStaged(staged: Seq[(String, graft.sources.StagingTriplet)],
       converter: StructureConverter = StructureConverter.Stub,
@@ -423,10 +398,41 @@ object Harmonize {
       staged.map { case (n, t) => pick(t).withColumn("source", lit(n)) }
         .reduce(_ unionByName _)
 
-    // substances: canonicalize + content-hash re-key (py:33-43)
-    val subsStaging = materialize(unionWithSource(_.substances)
-      .withColumn("data", canonicalizeJson(col("data")))
-      .withColumn("new_sid", md5(col("data"))))
+    // the three staging unions, materialized concurrently: none reads
+    // another, so their checkpoint jobs overlap
+    val Seq(subsStaging, propsStaging, actsStaging) =
+      graft.MemoRegistry.inParallel(staged.head._2.substances.sparkSession)(
+        Seq(
+          // substances: canonicalize + content-hash re-key (py:33-43)
+          unionWithSource(_.substances)
+            .withColumn("data", canonicalizeJson(col("data")))
+            .withColumn("new_sid", md5(col("data"))),
+          // properties: same (py:48-58)
+          unionWithSource(_.properties)
+            .withColumn("data", canonicalizeJson(col("data")))
+            .withColumn("new_pid", md5(col("data"))),
+          // activities: composite-key re-key joins (py:76-78). The union is
+          // consumed twice (re-key chain + the distinct-inchi scan below).
+          //
+          // PRE-COLLAPSE below the joins, INSIDE the materialization: a
+          // wide-assay source (bindingdb shape) stages many measurements per
+          // (sid, pid, value) — 6.8× at the testdata — and every duplicate
+          // would otherwise be checkpointed raw and ride through BOTH id-map
+          // shuffle joins only to be collapsed at the end. Grouping on the
+          // OLD ids first is a pure refinement of the final collapse (the
+          // old→new mapping is per-(source, old-id) functional, so groups
+          // can only merge downstream and min-of-min = min): bit-identical
+          // output, with the checkpoint, both join shuffles, AND the
+          // distinct-inchi scan carrying the collapsed row count instead of
+          // the raw staging count (the collapse preserves the inchi set).
+          // This is the partial-aggregation-below-join pushdown Catalyst
+          // can't infer across the union + join + hash re-key chain.
+          unionWithSource(_.activities)
+            .groupBy(col("source"), col("sid"), col("pid"), col("inchi"),
+              col("value"))
+            .agg(min(col("numvalue")).as("numvalue"))
+        ).map(df => () => materialize(df)))
+
     val substances = subsStaging
       .select(col("new_sid").as("sid"), col("source"), col("data"))
       .distinct()
@@ -434,10 +440,6 @@ object Harmonize {
       .select(col("source"), col("sid").as("old_sid"), col("new_sid"))
       .distinct()
 
-    // properties: same (py:48-58)
-    val propsStaging = materialize(unionWithSource(_.properties)
-      .withColumn("data", canonicalizeJson(col("data")))
-      .withColumn("new_pid", md5(col("data"))))
     val properties = propsStaging
       .select(col("new_pid").as("pid"), col("source"), col("data"))
       .distinct()
@@ -445,26 +447,6 @@ object Harmonize {
       .select(col("source"), col("pid").as("old_pid"), col("new_pid"))
       .distinct()
 
-    // activities: composite-key re-key joins (py:76-78). The union is
-    // consumed twice (re-key chain + the distinct-inchi scan below).
-    //
-    // PRE-COLLAPSE below the joins, INSIDE the materialization: a
-    // wide-assay source (bindingdb shape) stages many measurements per
-    // (sid, pid, value) — 6.8× at the testdata — and every duplicate
-    // would otherwise be checkpointed raw and ride through BOTH id-map
-    // shuffle joins only to be collapsed at the end. Grouping on the
-    // OLD ids first is a pure refinement of the final collapse (the
-    // old→new mapping is per-(source, old-id) functional, so groups
-    // can only merge downstream and min-of-min = min): bit-identical
-    // output, with the checkpoint, both join shuffles, AND the
-    // distinct-inchi scan carrying the collapsed row count instead of
-    // the raw staging count (the collapse preserves the inchi set).
-    // This is the partial-aggregation-below-join pushdown Catalyst
-    // can't infer across the union + join + hash re-key chain.
-    val actsStaging = materialize(unionWithSource(_.activities)
-      .groupBy(col("source"), col("sid"), col("pid"), col("inchi"),
-        col("value"))
-      .agg(min(col("numvalue")).as("numvalue")))
     // SHUFFLE_HASH on the id-map sides (VERDICT r12 #4): the default
     // sort-merge plan sorts the FACT side once per re-key join — at the
     // fourth decade that sort residency was the assembly's one

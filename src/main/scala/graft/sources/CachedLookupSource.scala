@@ -33,33 +33,33 @@ class CachedLookupSource(fetch: String => Option[String],
   def lookup(spark: SparkSession, keys: DataFrame): DataFrame = {
     import spark.implicits._
     val wanted = keys.select(col(keys.columns.head).as("key")).distinct()
-    val cached: DataFrame =
-      try spark.read.parquet(cacheDir)
-      catch { case _: Exception =>
-        Seq.empty[(String, String)].toDF("key", "value")
-      }
-    val misses = wanted.join(cached.select("key"), Seq("key"), "left_anti")
-    val all =
-      if (misses.isEmpty) cached
-      else {
-        val interval = minIntervalMs
-        val f = fetchFn
-        misses.coalesce(maxConcurrency).as[String].mapPartitions { it =>
-          var last = 0L
-          it.map { k =>
-            val wait = last + interval - System.currentTimeMillis()
-            if (wait > 0) Thread.sleep(wait)
-            last = System.currentTimeMillis()
-            k -> f(k).orNull
-          }
-        }.toDF("key", "value")
-          .filter(col("value").isNotNull)
-          .write.mode("append").parquet(cacheDir)
-        spark.read.parquet(cacheDir)
-      }
+    // the cache's fixed schema: reading with it skips schema inference
+    def cached = spark.read.schema("key STRING, value STRING").parquet(cacheDir)
+    val path = new org.apache.hadoop.fs.Path(cacheDir)
+    // no cache dir yet: every key is a miss, no probe job needed
+    val cold = !path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(path)
+    val misses =
+      if (cold) wanted
+      else wanted.join(cached.select("key"), Seq("key"), "left_anti")
+    if (cold || !misses.isEmpty) {
+      val interval = minIntervalMs
+      val f = fetchFn
+      misses.coalesce(maxConcurrency).as[String].mapPartitions { it =>
+        var last = 0L
+        it.map { k =>
+          val wait = last + interval - System.currentTimeMillis()
+          if (wait > 0) Thread.sleep(wait)
+          last = System.currentTimeMillis()
+          k -> f(k).orNull
+        }
+      }.toDF("key", "value")
+        .filter(col("value").isNotNull)
+        .write.mode("append").parquet(cacheDir)
+    }
     // min() rather than dropDuplicates: deterministic winner if a retry
     // ever appended two values for one key
-    all.groupBy(col("key")).agg(min(col("value")).as("value"))
+    cached.groupBy(col("key")).agg(min(col("value")).as("value"))
       .join(wanted, Seq("key"), "left_semi")
   }
 }

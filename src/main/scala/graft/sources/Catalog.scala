@@ -93,19 +93,22 @@ object Catalog {
     }
     var created = false
     def append(b: Harmonize.Brick): Unit = {
-      Seq(b.substances, b.properties, b.activities).zip(targets).foreach {
-        case (df, (name, key, t)) =>
-          // repartition on the bucket key FIRST: repartition's
-          // HashPartitioning and the bucket-file assignment use the
-          // same murmur3 pmod, so each write task holds exactly one
-          // bucket and emits exactly one file — without it every scan
-          // task writes its own file per bucket (~94 files/bucket at
-          // sf0.1, 3 000 tiny files per table; guide §6)
-          df.repartition(buckets, org.apache.spark.sql.functions.col(key))
-            .write.mode(if (created) "append" else "overwrite")
-            .bucketBy(buckets, key).sortBy(key)
-            .option("path", s"$dir/$name").saveAsTable(t)
-      }
+      val mode = if (created) "append" else "overwrite"
+      // the three tables are independent writes: run them concurrently
+      graft.MemoRegistry.inParallel(spark)(
+        Seq(b.substances, b.properties, b.activities).zip(targets).map {
+          case (df, (name, key, t)) => () =>
+            // repartition on the bucket key FIRST: repartition's
+            // HashPartitioning and the bucket-file assignment use the
+            // same murmur3 pmod, so each write task holds exactly one
+            // bucket and emits exactly one file — without it every scan
+            // task writes its own file per bucket (~94 files/bucket at
+            // sf0.1, 3 000 tiny files per table)
+            df.repartition(buckets, org.apache.spark.sql.functions.col(key))
+              .write.mode(mode)
+              .bucketBy(buckets, key).sortBy(key)
+              .option("path", s"$dir/$name").saveAsTable(t)
+        }): Unit
       created = true
     }
     try body(append)
@@ -130,7 +133,9 @@ object Catalog {
     * leave a default-base session reading the dead location).
     * Registration is idempotent per session; an adopted existing
     * table is REFRESHed so a pruned-and-rebuilt dir (same path, new
-    * part files) doesn't serve stale file listings.
+    * part files) doesn't serve stale file listings. The column schema
+    * comes from the files' footers ([[graft.ArtifactStore.readParquet]]),
+    * not from an inference job per table.
     */
   def registerBrickBucketedFiles(spark: SparkSession, dir: String,
       buckets: Int): Harmonize.Brick = {
@@ -143,7 +148,8 @@ object Catalog {
       if (!spark.catalog.tableExists(tbl))
         spark.sql(
           s"""CREATE TABLE $tbl
-             |(${spark.read.parquet(s"$dir/$name").schema.toDDL})
+             |(${graft.ArtifactStore.readParquet(spark, s"$dir/$name")
+                  .schema.toDDL})
              |USING parquet
              |CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
              |LOCATION '$dir/$name'""".stripMargin)

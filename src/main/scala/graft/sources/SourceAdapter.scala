@@ -100,10 +100,14 @@ object SourceAdapter {
           graft.ArtifactStore.dirKey(spark, sfDir, s"staging-v1-${a.name}"),
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER,
           "substances", "properties", "activities") { tmp =>
+          // the three part writes are independent jobs (each runs the
+          // staging plan for its own table): run them concurrently
           val t = a.staging(spark, sfDir)
-          t.substances.write.parquet(s"$tmp/substances")
-          t.properties.write.parquet(s"$tmp/properties")
-          t.activities.write.parquet(s"$tmp/activities")
+          graft.MemoRegistry.inParallel(spark)(Seq(
+            "substances" -> t.substances, "properties" -> t.properties,
+            "activities" -> t.activities).map { case (part, df) =>
+            () => df.write.parquet(s"$tmp/$part")
+          }): Unit
         }
         StagingTriplet(subs, props, acts)
       }

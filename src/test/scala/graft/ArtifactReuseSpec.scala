@@ -61,6 +61,53 @@ class ArtifactReuseSpec extends SparkSpec {
     }
   }
 
+  test("readParquet reports the inferred parquet schema and runs no job") {
+    val base = Files.createTempDirectory("graft-footer").toString
+    spark.conf.set(ArtifactStore.DirKey, base)
+    try {
+      MemoRegistry.evictAll(spark)
+      Harmonize.cachedBrick(spark, sf(), Seq(EventsAdapter, OrdersAdapter))
+      // non-null and nested fields, which a parquet read makes nullable
+      import org.apache.spark.sql.functions._
+      spark.range(3).select(col("id"),
+        struct(col("id").as("a"), lit("x").as("b")).as("s"),
+        array(struct(col("id").as("c"))).as("arr"),
+        map(lit("k"), col("id")).as("m"))
+        .write.parquet(s"$base/nested")
+      def leafDirs(d: java.io.File): Seq[java.io.File] = {
+        val kids = d.listFiles().toSeq
+        (if (kids.exists(_.getName.endsWith(".parquet"))) Seq(d) else Nil) ++
+          kids.filter(_.isDirectory).flatMap(leafDirs)
+      }
+      val dirs = leafDirs(new java.io.File(base)).map(_.getPath)
+      // the brick's three bucketed tables, three staging parts per
+      // adapter, and the nested frame
+      assert(dirs.size == 3 + 2 * 3 + 1, dirs)
+
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      val drain = org.apache.spark.sql.graftbridge.Bridge.drainListenerBus _
+      drain(spark, 10000L)
+      spark.sparkContext.addSparkListener(listener)
+      val read = try {
+        val r = dirs.map(d => ArtifactStore.readParquet(spark, d).schema)
+        drain(spark, 10000L)
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.get == 0, "readParquet ran a Spark job")
+      assert(read == dirs.map(d => spark.read.parquet(d).schema))
+    } finally {
+      spark.conf.unset(ArtifactStore.DirKey)
+      MemoRegistry.evictAll(spark)
+      org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(base))
+    }
+  }
+
   test("corpus-keyed artifacts adopt the store dir and share one " +
     "fingerprint per table") {
     val base = Files.createTempDirectory("graft-tablekey").toString

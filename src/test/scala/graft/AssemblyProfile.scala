@@ -103,6 +103,9 @@ object AssemblyProfile {
     // the ASSEMBLY; store-hosting the 14 stretch-scale triplets would
     // spend tens of GB of the scratch disk the acts shuffle needs.
     spark.conf.set(graft.ArtifactStore.EnabledKey, "false")
+    // one job at a time: the timed materialize hook below labels the
+    // staging unions in call order
+    spark.conf.set(MemoRegistry.StageThreadsKey, "1")
     val t0 = System.nanoTime()
     val staged = SourceAdapter.all.map(a =>
       a.name -> SourceAdapter.cachedStaging(a, spark, d))

@@ -29,9 +29,13 @@ class CachedLookupSpec extends SparkSpec {
     // second pass: full cache hit for known keys ("nope" returned None so
     // it is retried — negative results are not cached)
     val before = CachedLookupSpec.calls.get()
+    def files: Set[String] = new java.io.File(dir).list().toSet
+    val filesBefore = files
     val again = src.lookup(spark, Seq("a", "b", "c").toDF("key"))
     assert(again.count() == 3)
     assert(CachedLookupSpec.calls.get() == before, "no refetch on cache hit")
+    // a cache holding every key writes nothing either
+    assert(files == filesBefore)
   }
 }
 
