@@ -51,30 +51,15 @@ import graft.MemoRegistry.SessionMemo
   * cardinality). [[dirKey]] keys artifacts derived from a whole input
   * dir (stagings, the brick).
   *
-  * Reclamation (ADVICE r10): nothing is deleted implicitly — eviction
-  * of a session memo only releases the frames read back from a dir,
-  * because another JVM may be mid-read. [[prune]] is the explicit GC:
-  * completed dirs whose `_OK` is older than a caller-chosen age (pick
-  * one comfortably beyond any session lifetime), plus crashed `.tmp-*`
-  * leftovers.
+  * Reclamation (ADVICE r10): nothing under the store base is deleted
+  * implicitly — eviction of a session memo only releases the frames
+  * read back from a dir, because another JVM may be mid-read. [[prune]]
+  * is the explicit GC: completed dirs whose `_OK` is older than a
+  * caller-chosen age (pick one comfortably beyond any session
+  * lifetime), plus crashed `.tmp-*` leftovers.
   */
 object ArtifactStore {
   val DirKey = "spark.graft.artifact.dir"
-
-  /** `spark.graft.artifact.enabled=false` opts a session out of
-    * hosting the DIR-derived artifacts: the brick and the adapter
-    * stagings fall back to their session-local checkpoint form. For
-    * probes that must not spend scratch disk on corpus-sized copies —
-    * correctness is identical either way (the store only relocates
-    * WHERE a deterministic build materializes). The table-keyed
-    * artifacts ([[tableKey]]: Jaccard/candidate pairs, IVF and PQ
-    * tables, the ann14 and x24 indexes, the shortlist width) do not
-    * read this key and are hosted regardless.
-    */
-  val EnabledKey = "spark.graft.artifact.enabled"
-
-  def enabled(spark: SparkSession): Boolean =
-    !spark.conf.getOption(EnabledKey).contains("false")
 
   /** Size gate for hosting artifacts DERIVED from an input dir
     * (stagings, the brick): hosting pays when many JVMs re-read the
@@ -84,9 +69,12 @@ object ArtifactStore {
     * artifacts starved the fourth-decade shuffle of disk). Inputs
     * above `spark.graft.artifact.host.maxInputBytes` (default 1 GiB
     * of source-file bytes — covers every gate corpus, excludes the
-    * macro stretches) fall back to session-local materialization;
-    * corpus-keyed artifacts (PQ/candidate tables over one table) stay
-    * hosted at any size — they are output-bounded, not
+    * macro stretches) are materialized for the session only: the
+    * stagings as checkpoint blocks, the brick as the same bucketed dir
+    * written into a session-owned scratch dir that its eviction
+    * deletes (`Harmonize.cachedBrick`). `maxInputBytes=1` gates every
+    * corpus. Corpus-keyed artifacts (PQ/candidate tables over one
+    * table) stay hosted at any size — they are output-bounded, not
     * amplification-bounded.
     */
   val MaxInputBytesKey = "spark.graft.artifact.host.maxInputBytes"
@@ -107,11 +95,16 @@ object ArtifactStore {
       sys.props.getOrElse("java.io.tmpdir", "/tmp") +
         "/graft-artifacts-" + sys.props.getOrElse("user.name", "anon")))
 
-  def ensure(spark: SparkSession, name: String, contentKey: String)(
-      build: String => Unit): String = {
+  /** Publish `<base>/<name>-<contentKey>` by the protocol above,
+    * building it with `build(tmpDir)` unless it is already complete.
+    * `base` defaults to the store base; a session-owned scratch dir
+    * passes its own (`Harmonize.cachedBrick`) and a unique key.
+    */
+  def ensure(spark: SparkSession, name: String, contentKey: String,
+      base: Option[String] = None)(build: String => Unit): String = {
     import java.nio.file.{Files, StandardCopyOption}
-    val base = baseDir(spark)
-    val target = base.resolve(s"$name-$contentKey")
+    val root = base.fold(baseDir(spark))(java.nio.file.Paths.get(_))
+    val target = root.resolve(s"$name-$contentKey")
     def complete = Files.exists(target.resolve("_OK"))
     if (Files.exists(target)) {
       require(complete, s"artifact dir $target exists without its _OK " +
@@ -120,8 +113,8 @@ object ArtifactStore {
       requireOwned(target)
       return target.toString
     }
-    createPrivateDir(base)
-    val tmp = base.resolve(
+    createPrivateDir(root)
+    val tmp = root.resolve(
       s".$name-$contentKey.tmp-${java.util.UUID.randomUUID()}")
     try {
       build(tmp.toString)

@@ -29,9 +29,10 @@ object GraftSession {
     * REJECTED — mid-stage eviction trades aggregation spill for disk
     * churn that the join stages then re-pay reading the blocks back;
     * measured slower than the default floor at the 10× stretch. The
-    * working levers are serialized checkpoint blocks for fact-scale
-    * memos — MemoRegistry.checkpointLarge — and a heap sized to the
-    * data for single-JVM macro runs; see BENCH_LOCAL.md round 7.)
+    * working levers are serialized blocks for fact-scale memos (the
+    * staging unions' MemoRegistry.checkpointLarge, the brick's persist)
+    * and a heap sized to the data for single-JVM macro runs; see
+    * BENCH_LOCAL.md round 7.)
     *
     * The generated-code cache holds 2000 classes instead of Spark's
     * 100: one pass of six session queries (q1, j1, h10, x24, dd3, ann5)

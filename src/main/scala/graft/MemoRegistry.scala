@@ -25,12 +25,13 @@ object MemoRegistry {
 
   def evictAll(spark: SparkSession): Unit = {
     hooks.synchronized { hooks.toSeq }.foreach(_(spark))
-    // Reliable-mode handoffs whose frames were dropped WITHOUT release
-    // (a build that failed after materializing, a race-overwritten memo
-    // entry) would otherwise orphan their parquet dirs forever — the
-    // weak frame→path map can't see them once the frame is GC'd. The
-    // sweep is TWO-PHASE: a path is deleted only when it is still
-    // unreleased at a SECOND consecutive evictAll. A build in flight
+    // Owned dirs (reliable-mode handoffs, scratch bricks) whose frames
+    // were dropped WITHOUT release (a build that failed after
+    // materializing, a race-overwritten memo entry) would otherwise
+    // orphan their dirs forever — the weak frame→path map can't see
+    // them once the frame is GC'd. The sweep is TWO-PHASE: a path is
+    // deleted only when it is still unreleased at a SECOND consecutive
+    // evictAll. A build in flight
     // during one eviction (builds run outside every lock by design)
     // keeps its handoff; by the next eviction it has either memoized —
     // the hooks above just released it — or died, and only then is the
@@ -74,9 +75,9 @@ object MemoRegistry {
   }
 
   /** Eager localCheckpoint at MEMORY_AND_DISK_SER — the storage level
-    * for LARGE memoized fact frames (staging triplets, brick assembly
-    * intermediates, brick tables). The default deserialized level keeps
-    * one UnsafeRow copy + object header per row resident; serialized
+    * for LARGE memoized fact frames (size-gated staging triplets, the
+    * brick assembly's staging unions). The default deserialized level
+    * keeps one UnsafeRow copy + object header per row resident; serialized
     * blocks are one compact buffer per partition, several times
     * smaller. That footprint is the difference between the brick
     * assembly aggregating with free execution memory and spilling:
@@ -108,13 +109,7 @@ object MemoRegistry {
       // spindle serializing the handoff I/O — zero spill, linear
       // shuffle bytes (BENCH_LOCAL round 8). On a cluster the list
       // would be mount points; a single dir keeps the old behavior.
-      val defaultBase =
-        sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-ckpt"
-      val configured = spark.conf.getOption(CkptDirKey).getOrElse(defaultBase)
-        .split(',').map(_.trim).filter(_.nonEmpty)
-      // ADVICE r9: a conf value that trims to zero entries ("" or ",")
-      // must fall back to the default base, not mod-by-zero below
-      val bases = if (configured.isEmpty) Array(defaultBase) else configured
+      val bases = ckptBases(spark)
       val base = bases(
         Math.floorMod(ckptRoundRobin.getAndIncrement(), bases.length))
       val path = s"$base/ckpt-${java.util.UUID.randomUUID()}"
@@ -125,17 +120,7 @@ object MemoRegistry {
       // scratch space the next stage's shuffle needs (round-11 finding).
       df.write.mode("overwrite").option("compression", "zstd")
         .parquet(path)
-      val out = spark.read.parquet(path)
-      reliablePaths.put(out, path)
-      pathsLock.synchronized {
-        var s = sessionPaths.get(spark)
-        if (s == null) {
-          s = new java.util.HashSet[String]()
-          sessionPaths.put(spark, s): Unit
-        }
-        s.add(path): Unit
-      }
-      out
+      owned(spark.read.parquet(path), path)
     } else df.localCheckpoint(true,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
   }
@@ -150,10 +135,45 @@ object MemoRegistry {
   val CkptDirKey = "spark.graft.checkpoint.dir"
   private val ckptRoundRobin = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** The `spark.graft.checkpoint.dir` entries; "" or "," falls back to
+    * the default, never a mod-by-zero (ADVICE r9). The first entry also
+    * holds scratch bricks (`Harmonize.cachedBrick`).
+    */
+  private[graft] def ckptBases(spark: SparkSession): Array[String] = {
+    val defaultBase =
+      sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-ckpt"
+    val configured = spark.conf.getOption(CkptDirKey).getOrElse(defaultBase)
+      .split(',').map(_.trim).filter(_.nonEmpty)
+    if (configured.isEmpty) Array(defaultBase) else configured
+  }
+
+  /** Make `path` a session-owned dir that lives as long as `df`:
+    * [[release]] of the frame deletes the dir, `evictAll`'s sweep
+    * reclaims it if the frame is dropped without a release, and a JVM
+    * that exits first deletes it on exit. Several frames may own one
+    * dir (a scratch brick's three tables); the first release deletes
+    * it. Returns `df`.
+    */
+  private[graft] def owned(df: DataFrame, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      .deleteOnExit(p): Unit
+    reliablePaths.put(df, path)
+    pathsLock.synchronized {
+      var s = sessionPaths.get(df.sparkSession)
+      if (s == null) {
+        s = new java.util.HashSet[String]()
+        sessionPaths.put(df.sparkSession, s): Unit
+      }
+      s.add(path): Unit
+    }
+    df
+  }
+
   private val reliablePaths = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[DataFrame, String]())
 
-  /** Per-session registry of every reliable handoff dir — the cleanup
+  /** Per-session registry of every [[owned]] dir — the cleanup
     * backstop `evictAll` uses for paths whose frame never saw `release`
     * (the weak frame→path map alone would orphan those files). Keys are
     * WEAK: a session that stops without ever calling evictAll doesn't
@@ -167,28 +187,29 @@ object MemoRegistry {
   private val pendingSweep =
     new java.util.WeakHashMap[SparkSession, java.util.HashSet[String]]()
 
+  // a scratch brick dir is also catalog tables: drop them first
   private def deletePath(spark: SparkSession, path: String): Unit = {
+    graft.sources.Catalog.dropBrickTables(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, true): Unit
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(p, true)
+    fs.cancelDeleteOnExit(p): Unit
   }
 
   /** Release one memoized frame: drop its CacheManager entry AND any
     * localCheckpoint blocks backing its plan leaves (unpersist alone
-    * leaves those to the garbage collector). Reliable-mode handoff
-    * frames delete their parquet dir instead.
+    * leaves those to the garbage collector). A frame that [[owned]] a
+    * dir (a reliable-mode handoff, a scratch brick) also deletes it.
     */
   def release(df: DataFrame): Unit = {
-    Option(reliablePaths.remove(df)) match {
-      case Some(path) =>
-        pathsLock.synchronized {
-          Option(sessionPaths.get(df.sparkSession)).foreach(_.remove(path))
-          Option(pendingSweep.get(df.sparkSession)).foreach(_.remove(path))
-        }
-        deletePath(df.sparkSession, path)
-      case None =>
-        df.unpersist(blocking = false)
-        org.apache.spark.sql.graftbridge.Bridge.freeCheckpointBlocks(df)
+    df.unpersist(blocking = false)
+    org.apache.spark.sql.graftbridge.Bridge.freeCheckpointBlocks(df)
+    Option(reliablePaths.remove(df)).foreach { path =>
+      pathsLock.synchronized {
+        Option(sessionPaths.get(df.sparkSession)).foreach(_.remove(path))
+        Option(pendingSweep.get(df.sparkSession)).foreach(_.remove(path))
+      }
+      deletePath(df.sparkSession, path)
     }
   }
 

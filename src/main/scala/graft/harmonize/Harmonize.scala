@@ -35,20 +35,16 @@ object Harmonize {
   case class Brick(substances: DataFrame, properties: DataFrame,
       activities: DataFrame)
 
-  /** Session-scoped memo of the brick per (session, sfDir, adapters):
-    * Verify/Bench run every query in one session and six queries read the
-    * brick — materializing the three tables once (the
-    * explicit-materialization stance of the reference's staging cache,
-    * SURVEY §4 "Materialization") removes five rebuilds. Results are
-    * unchanged: the checkpoint only stores the deterministic plan output.
-    *
-    * localCheckpoint, not persist: the eight-source union's analyzed
-    * lineage is ~900 plan nodes, and a persisted DataFrame KEEPS that
-    * lineage — every downstream action then pays cache-lookup
-    * canonicalization and re-optimization over the whole tree (measured:
-    * h5's two-aggregate join ran 9-19 s on fully-hot caches at sf0.1,
-    * pure planning overhead). Checkpointing truncates the lineage to a
-    * scanned leaf, which is also the 100 TB posture: a brick this
+  /** Session-scoped memo of the brick per (session, sfDir, adapters,
+    * converter): Verify/Bench run every query in one session and six
+    * queries read the brick — opening the three tables once removes
+    * five rebuilds or re-opens. Every entry is a bucketed brick dir
+    * adopted as catalog tables ([[cachedBrick]]), so the frames' plans
+    * are a scanned leaf, not the ~900-node analyzed lineage of the
+    * eight-source union, which every downstream action would otherwise
+    * re-canonicalize and re-optimize (measured: h5's two-aggregate
+    * join ran 9-19 s on fully-hot caches at sf0.1, pure planning
+    * overhead). That is also the 100 TB posture: a brick this
     * expensive is written to storage once and every consumer reads the
     * artifact, not the recipe.
     */
@@ -56,11 +52,34 @@ object Harmonize {
     (String, String, StructureConverter), Brick](b =>
     Seq(b.substances, b.properties, b.activities))
 
-  /** Evict this session's cached bricks (frees the checkpoint blocks);
-    * the next cachedBrick call rebuilds bit-identically.
+  /** Evict this session's cached bricks: release the persisted frames;
+    * a scratch brick also loses its dir and catalog tables. The next
+    * cachedBrick call re-opens a hosted dir or rebuilds a scratch one,
+    * bit-identically either way.
     */
   def evict(spark: SparkSession): Unit = memo.evict(spark)
 
+  /** The brick: always the bucketed dir [[buildBrickBucketedTo]] writes
+    * (activities and substances bucketed and sorted on sid, properties
+    * on pid), adopted as bucketed catalog tables, so every sid/pid-keyed
+    * aggregate or join over it elides its fact-side exchange (VERDICT
+    * r14 #2; BucketedBrickProbe: 3.5× at 156M rows). Only the dir's
+    * location depends on the input:
+    *   - HOSTED (VERDICT r10 #4): the stub converter — the only one
+    *     whose output is a pure function of the input files — and an
+    *     input within the hosting size gate. The dir is content-keyed
+    *     in the ArtifactStore, so a second JVM READS the brick instead
+    *     of re-staging and re-assembling; eviction releases the frames
+    *     only, as the dir is shared.
+    *   - SCRATCH: a custom converter (no key can fingerprint it) or an
+    *     input over `spark.graft.artifact.host.maxInputBytes`. The dir
+    *     is `brick-<uuid>` under the first `spark.graft.checkpoint.dir`
+    *     entry, never in the store. The session owns it
+    *     ([[graft.MemoRegistry.owned]]): eviction drops its tables and
+    *     deletes it.
+    * The persist of the read-back KEEPS the bucketed partitioning
+    * (InMemoryRelation reports the cached scan's; BrickLayoutSpec).
+    */
   def cachedBrick(spark: SparkSession, sfDir: String,
       adapters: Seq[SourceAdapter],
       converter: StructureConverter = StructureConverter.Stub): Brick = {
@@ -68,49 +87,30 @@ object Harmonize {
     // keyed on the converter instance itself: two differently-configured
     // instances of the same converter class must not share a brick
     memo(spark, (sfDir, names, converter)) {
-      // CROSS-SESSION brick (VERDICT r10 #4): with the default stub
-      // converter — the only converter whose output is a pure
-      // function of the input files — the three tables live in a
-      // content-keyed ArtifactStore dir, so a second JVM on this
-      // machine READS the brick instead of re-staging 14 sources and
-      // re-assembling (the single largest block of the cold pass). A
-      // custom converter is an opaque instance the key cannot
-      // fingerprint; those builds stay session-local.
-      if ((converter eq StructureConverter.Stub) &&
-          graft.ArtifactStore.enabled(spark) &&
-          graft.ArtifactStore.hostableInput(spark, sfDir)) {
-        // VERDICT r14 #2 / r15 #5: the brick's one stored layout is
-        // BUCKETED files (activities and substances bucketed+sorted
-        // on sid, properties on pid), written straight by the build —
-        // one write of the fact table — and read back as bucketed
-        // catalog tables, so every sid/pid-keyed aggregate or join
-        // over the brick starts from the key's partitioning and
-        // elides its fact-side exchange (the BucketedBrickProbe
-        // receipt, 3.5× at 156M rows). v2 of the recipe writes ONE
-        // file per bucket per slice (guide §6 small files: v1 left
-        // ~94 task-files per bucket). `spark.graft.assembly.slices`
-        // only changes how many adapter slices the build deals.
-        val buckets = brickBuckets(spark)
-        val bkey = graft.ArtifactStore.dirKey(spark, sfDir,
-          s"brickb-v2-$buckets-" + names)
-        val slices = spark.conf.getOption(SlicesKey)
-          .map(_.trim.toInt).getOrElse(1)
-        val bdir = graft.ArtifactStore.ensure(spark, "brickb", bkey) {
-          tmp =>
-            buildBrickBucketedTo(spark, sfDir,
-              sliceAdapters(adapters, slices), converter, tmp, buckets)
-        }
-        val b = graft.sources.Catalog.registerBrickBucketedFiles(
-          spark, bdir, buckets)
-        // read-back frames get the same serialized-block residency
-        // the checkpointed build had, so warm consumers are
-        // unchanged; the persist KEEPS the bucketed partitioning
-        // (InMemoryRelation reports the cached scan's partitioning —
-        // BrickLayoutSpec pins it)
-        def pr(df: DataFrame) = df.persist(
+      val buckets = brickBuckets(spark)
+      val slices = spark.conf.getOption(SlicesKey)
+        .map(_.trim.toInt).getOrElse(1)
+      def build(tmp: String): Unit = buildBrickBucketedTo(spark, sfDir,
+        sliceAdapters(adapters, slices), converter, tmp, buckets)
+      val hosted = (converter eq StructureConverter.Stub) &&
+        graft.ArtifactStore.hostableInput(spark, sfDir)
+      val dir =
+        // v2 of the recipe writes ONE file per bucket per slice (v1 left
+        // ~94 task-files per bucket)
+        if (hosted) graft.ArtifactStore.ensure(spark, "brickb",
+          graft.ArtifactStore.dirKey(spark, sfDir,
+            s"brickb-v2-$buckets-" + names))(build)
+        else graft.ArtifactStore.ensure(spark, "brick",
+          java.util.UUID.randomUUID().toString,
+          Some(graft.MemoRegistry.ckptBases(spark).head))(build)
+      val b = graft.sources.Catalog.registerBrickBucketedFiles(
+        spark, dir, buckets)
+      def pr(df: DataFrame) = {
+        val p = df.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Brick(pr(b.substances), pr(b.properties), pr(b.activities))
-      } else buildBrick(spark, sfDir, adapters, converter)
+        if (hosted) p else graft.MemoRegistry.owned(p, dir)
+      }
+      Brick(pr(b.substances), pr(b.properties), pr(b.activities))
     }
   }
 
@@ -180,49 +180,13 @@ object Harmonize {
         .min(BigInt(Long.MaxValue)).toLong
     }.foldLeft(0L)((a, b) => if (a + b < a) Long.MaxValue else a + b)
 
-  /** The checkpointed in-memory assembly — cachedBrick's session-local
-    * route (store disabled, input over the hosting size gate, or a
-    * custom converter); hosted bricks go through [[buildBrickBucketedTo]].
-    *
-    * Shared-scan assembly: the canonicalize+md5 staging unions are
-    * each consumed twice (substances + sidMap, properties + pidMap,
-    * activities-union + inchiMap), so checkpointing the three final
-    * tables separately executed every staging union — and the
-    * canonicalize UDF — twice. Materializing the intermediates once
-    * makes the three table checkpoints cheap projections of shared
-    * scans (BrickProfile: assembly 30.8s → ~17s at sf0.1).
-    * checkpointLarge (serialized blocks) for the staging unions and
-    * the three tables: these are the fact-scale frames whose
-    * deserialized footprint starved the assembly's aggregation into
-    * spill at the 10× stretch (see MemoRegistry.checkpointLarge).
-    */
-  private def buildBrick(spark: SparkSession, sfDir: String,
-      adapters: Seq[SourceAdapter], converter: StructureConverter): Brick = {
-    val inter = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val staged = stageAll(spark, sfDir, adapters)
-    // the staging-union checkpoints only serve the assembly; the three
-    // final tables carry their own blocks, so free the intermediates as
-    // soon as the assembly finishes — in a finally, so a failed final
-    // checkpoint doesn't leave them pinned for the session (ADVICE r12)
-    try withScaledInitialPartitions(spark, stagedBytes(staged)) {
-      val b = brickFromStaged(staged, converter,
-        materialize = { df =>
-          val c = graft.MemoRegistry.checkpointLarge(df)
-          inter.synchronized { inter += c }; c
-        })
-      Brick(graft.MemoRegistry.checkpointLarge(b.substances),
-        graft.MemoRegistry.checkpointLarge(b.properties),
-        graft.MemoRegistry.checkpointLarge(b.activities))
-    } finally inter.foreach(graft.MemoRegistry.release)
-  }
-
-  /** Conf: adapter-slice count for the hosted brick build
+  /** Conf: adapter-slice count for the brick build
     * ([[buildBrickBucketedTo]]). Default 1 — the one-shot build; every
     * gate-scale plan is unchanged unless a deployment opts in.
     */
   val SlicesKey = "spark.graft.assembly.slices"
 
-  /** Bucket count of the hosted brick: the building session's
+  /** Bucket count of the brick: the building session's
     * `spark.sql.shuffle.partitions` (the core count under
     * `GraftSession.local`). A bucket scan then runs one task per
     * partition the session's shuffles use, so the brick side and the

@@ -139,12 +139,9 @@ object Catalog {
     */
   def registerBrickBucketedFiles(spark: SparkSession, dir: String,
       buckets: Int): Harmonize.Brick = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(12)
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_brick")
     def reg(name: String, key: String): org.apache.spark.sql.DataFrame = {
-      val tbl = s"graft_brick.${name}_$suffix"
+      val tbl = brickTable(dir, name)
       if (!spark.catalog.tableExists(tbl))
         spark.sql(
           s"""CREATE TABLE $tbl
@@ -159,4 +156,19 @@ object Catalog {
     Harmonize.Brick(reg("substances", "sid"), reg("properties", "pid"),
       reg("activities", "sid"))
   }
+
+  /** Catalog name of brick table `name` adopted from `dir`. */
+  private def brickTable(dir: String, name: String): String =
+    s"graft_brick.${name}_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString.take(12)
+
+  /** Drop the tables [[registerBrickBucketedFiles]] adopted from `dir`,
+    * if any; the files stay (the tables are external).
+    */
+  private[graft] def dropBrickTables(spark: SparkSession,
+      dir: String): Unit =
+    Seq("substances", "properties", "activities").map(brickTable(dir, _))
+      .filter(spark.catalog.tableExists)
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 }

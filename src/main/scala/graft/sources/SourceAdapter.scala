@@ -76,12 +76,10 @@ object SourceAdapter {
   def cachedStaging(a: SourceAdapter, spark: SparkSession,
       sfDir: String): StagingTriplet =
     memo(spark, (sfDir, a.name)) {
-      if (!graft.ArtifactStore.enabled(spark) ||
-          !graft.ArtifactStore.hostableInput(spark, sfDir)) {
-        // opt-out (spark.graft.artifact.enabled=false) or an input dir
-        // above the hosting size gate (stretch-scale corpora would
-        // write tens of GB of artifacts): the pre-r11 session-local
-        // form — serialized checkpoint blocks
+      if (!graft.ArtifactStore.hostableInput(spark, sfDir)) {
+        // an input dir above the hosting size gate (stretch-scale
+        // corpora would write tens of GB of artifacts): the pre-r11
+        // session-local form — serialized checkpoint blocks
         val t = a.staging(spark, sfDir)
         StagingTriplet(graft.MemoRegistry.checkpointLarge(t.substances),
           graft.MemoRegistry.checkpointLarge(t.properties),

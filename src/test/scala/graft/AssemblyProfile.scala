@@ -99,10 +99,11 @@ object AssemblyProfile {
     }
 
     // stage everything first (what BrickProfile attributes per adapter).
-    // Session-local staging (artifact hosting off): the profile measures
-    // the ASSEMBLY; store-hosting the 14 stretch-scale triplets would
-    // spend tens of GB of the scratch disk the acts shuffle needs.
-    spark.conf.set(graft.ArtifactStore.EnabledKey, "false")
+    // Session-local staging (every input over the hosting size gate):
+    // the profile measures the ASSEMBLY; store-hosting the 14
+    // stretch-scale triplets would spend tens of GB of the scratch disk
+    // the acts shuffle needs.
+    spark.conf.set(graft.ArtifactStore.MaxInputBytesKey, "1")
     // one job at a time: the timed materialize hook below labels the
     // staging unions in call order
     spark.conf.set(MemoRegistry.StageThreadsKey, "1")

@@ -8,8 +8,9 @@ import graft.sources.{Catalog, SourceAdapter}
 /** The bucketed brick layout over the full EIGHT-source brick: written
   * once via Catalog.writeBrickBucketedFiles, adopted via
   * registerBrickBucketedFiles, downstream sid-joins run with zero
-  * shuffle exchange. The hosted brick takes its bucket count from the
-  * building session's shuffle partitions.
+  * shuffle exchange. Every cachedBrick route serves this layout, and
+  * the brick takes its bucket count from the building session's
+  * shuffle partitions.
   */
 class BrickLayoutSpec extends SparkSpec {
 
@@ -89,6 +90,62 @@ class BrickLayoutSpec extends SparkSpec {
       plain.activities.exceptAll(brick.activities).isEmpty)
     assert(brick.substances.exceptAll(plain.substances).isEmpty)
     assert(brick.properties.exceptAll(plain.properties).isEmpty)
+  }
+
+  test("every cachedBrick route is bucketed: size-gated and custom-converter bricks too") {
+    // the two scratch routes: a session whose input is over the hosting
+    // size gate, and a converter no store key can fingerprint. Each
+    // writes the same bucketed dir as the hosted route, into a scratch
+    // dir under the checkpoint base, and eviction deletes it.
+    class Upper extends graft.chem.StructureConverter {
+      def inchiToSmiles(i: String): String =
+        if (i == null) null else i.toUpperCase
+      def smilesToInchi(s: String): String =
+        if (s == null) null else s.toLowerCase
+    }
+    val upper = new Upper
+    val adapters = Seq(graft.sources.EventsAdapter,
+      graft.sources.OrdersAdapter)
+    val ckpt = Files.createTempDirectory("graft-brick-scratch").toString
+    def scratchDirs: Seq[String] = new java.io.File(ckpt).list().toSeq
+      .filter(_.startsWith("brick-"))
+    val gated = spark.newSession()
+    def same(label: String, a: Harmonize.Brick, b: Harmonize.Brick): Unit =
+      Seq((a.substances, b.substances), (a.properties, b.properties),
+        (a.activities, b.activities)).foreach { case (x, y) =>
+        assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, label)
+      }
+    def bucketed(label: String, b: Harmonize.Brick): Unit = {
+      b.activities.count()
+      val scan = b.activities.queryExecution.executedPlan.toString
+      assert(scan.contains("Bucketed: true"), s"$label:\n$scan")
+      val agg = b.activities.groupBy(col("sid")).agg(count(lit(1)))
+      val aggPlan = agg.queryExecution.executedPlan.toString
+      assert(!aggPlan.contains("Exchange hashpartitioning"),
+        s"$label: groupBy(sid) must be exchange-free:\n$aggPlan")
+    }
+    try {
+      Seq(spark, gated).foreach(_.conf.set(MemoRegistry.CkptDirKey, ckpt))
+      gated.conf.set(ArtifactStore.MaxInputBytesKey, "1")
+      val hosted = Harmonize.cachedBrick(spark, sf(), adapters)
+      bucketed("hosted", hosted)
+
+      val sizeGated = Harmonize.cachedBrick(gated, sf(), adapters)
+      bucketed("size-gated", sizeGated)
+      same("size-gated", sizeGated, hosted)
+
+      val custom = Harmonize.cachedBrick(spark, sf(), adapters, upper)
+      bucketed("custom converter", custom)
+      same("custom converter", custom,
+        Harmonize.brick(spark, sf(), adapters, upper))
+      assert(scratchDirs.size == 2, scratchDirs)
+    } finally {
+      MemoRegistry.evictAll(gated)
+      Harmonize.evict(spark)
+      Seq(spark, gated).foreach(_.conf.unset(MemoRegistry.CkptDirKey))
+    }
+    assert(scratchDirs.isEmpty, s"eviction left scratch bricks: $scratchDirs")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
   }
 
   test("the hosted brick has one bucket per shuffle partition of its session") {

@@ -36,7 +36,7 @@ object BucketedBrickProbe {
         sys.env.getOrElse("SPARK_GRAFT_CKPT_DIR",
           "/root/repo/target/graft-ckpt"))
     }
-    spark.conf.set(graft.ArtifactStore.EnabledKey, "false")
+    spark.conf.set(graft.ArtifactStore.MaxInputBytesKey, "1")
 
     def time[T](n: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -40,10 +40,11 @@ object SlicedAssemblyProbe {
           "/root/repo/target/graft-ckpt"))
       println(s"[sliced] checkpoint mode: $m")
     }
-    // session-local staging, same rationale as AssemblyProfile: the
-    // probe measures the assembly; store-hosting stretch-scale
-    // triplets would spend the scratch the run is budgeting
-    spark.conf.set(graft.ArtifactStore.EnabledKey, "false")
+    // session-local staging (every input over the hosting size gate),
+    // same rationale as AssemblyProfile: the probe measures the
+    // assembly; store-hosting stretch-scale triplets would spend the
+    // scratch the run is budgeting
+    spark.conf.set(graft.ArtifactStore.MaxInputBytesKey, "1")
 
     @volatile var spill = 0L
     @volatile var shufW = 0L
