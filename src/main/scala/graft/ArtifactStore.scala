@@ -163,6 +163,25 @@ object ArtifactStore {
     parts.map(p => readParquet(spark, s"$dir/$p").persist(level))
   }
 
+  private val tableFrameMemo =
+    new SessionMemo[(String, String), Seq[DataFrame]](identity)
+
+  /** [[frames]] of an artifact derived from one table, keyed by
+    * [[tableKey]] and memoized per (session, sfDir, name): a session
+    * reads each such artifact once, and a hit costs one map lookup, not
+    * the fingerprint. Eviction releases the frames. A `write` may read
+    * other artifacts through this memo (a residual codebook reads the
+    * list assignment); that nests, since the memo builds outside its
+    * lock.
+    */
+  def tableFrames(spark: SparkSession, sfDir: String, table: String,
+      name: String, recipe: String, level: StorageLevel, parts: String*)(
+      write: String => Unit): Seq[DataFrame] =
+    tableFrameMemo(spark, (sfDir, name)) {
+      frames(spark, name, tableKey(spark, sfDir, table, recipe), level,
+        parts: _*)(write)
+    }
+
   /** `spark.read.parquet(dir)` without its schema-inference job. Spark's
     * parquet writer records the frame's schema in every file's footer,
     * and inference runs one Spark job to read that footer back; this

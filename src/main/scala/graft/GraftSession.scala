@@ -63,25 +63,13 @@ object GraftSession {
     val viaExtensions = spark.conf.getOption("spark.sql.extensions")
       .exists(_.contains("GraftExtensions"))
     if (!viaExtensions) {
-      if (!spark.experimental.extraStrategies.contains(plans.AsOfStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ plans.AsOfStrategy
-      }
-      if (!spark.experimental.extraOptimizations
-          .contains(plans.PushDistinctThroughUnion)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+
-            plans.PushDistinctThroughUnion
-      }
+      plans.addStrategy(spark, plans.AsOfStrategy)
+      plans.addOptimization(spark, plans.PushDistinctThroughUnion)
       // Best effort only: an existing session has no analyzer hook, and
       // by the user-provided-optimizers batch column pruning may have
       // specialised the union branches (the rule then no-ops). The full
       // rewrite needs the extensions path or plans.Melt.rewrite(df).
-      if (!spark.experimental.extraOptimizations
-          .contains(plans.MeltUnionToExpand)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ plans.MeltUnionToExpand
-      }
+      plans.addOptimization(spark, plans.MeltUnionToExpand)
       functions.GraftFunctions.register(spark)
     }
     // conf-gated artifact-store GC (default off: no conf → no-op);

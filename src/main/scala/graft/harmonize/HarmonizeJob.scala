@@ -21,8 +21,7 @@ object HarmonizeJob {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.PushDistinctThroughUnion
+    graft.plans.addOptimization(spark, graft.plans.PushDistinctThroughUnion)
 
     val adapters = graft.sources.SourceAdapter.all
     val brick = Harmonize.cachedBrick(spark, sfDir, adapters)

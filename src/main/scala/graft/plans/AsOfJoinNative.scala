@@ -133,10 +133,7 @@ object AsOf {
   def asOfJoinNative(left: DataFrame, right: DataFrame, key: String,
       ts: String): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfStrategy
-    }
+    addStrategy(spark, AsOfStrategy)
     val la = Bridge.analyzed(left)
     val ra = Bridge.analyzed(right)
     def attr(p: LogicalPlan, n: String): Attribute = p.output

@@ -20,8 +20,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * branch that is already a distinct aggregate is left alone), which
   * keeps it stable under the optimizer's fixed-point batches.
   *
-  * Injected by GraftExtensions (spark.sql.extensions) or at runtime via
-  * `spark.experimental.extraOptimizations`.
+  * Injected by GraftExtensions (spark.sql.extensions) or at runtime by
+  * `plans.addOptimization`.
   */
 object PushDistinctThroughUnion extends Rule[LogicalPlan] {
 

@@ -134,10 +134,7 @@ object TopK {
   def topKPerGroup(df: DataFrame, groupCols: Seq[String], orderCol: String,
       desc: Boolean, k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
+    addStrategy(spark, TopKStrategy)
     val analyzed = Bridge.analyzed(df)
     def attr(n: String): Attribute = analyzed.output
       .find(_.name == n)

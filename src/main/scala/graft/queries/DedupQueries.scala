@@ -41,22 +41,17 @@ object DedupQueries extends QueryModule {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val jMemo = new SessionMemo[String, DataFrame](Seq(_))
-
   /** Jaccard pair frame shared by dd2 (census) and dd6 (materialize),
     * plus the component family (dd8/dd9/dd11/c1/c6/c7) through
     * [[cachedComponents]]. Store-hosted: the shingle explode and band
     * joins run once per machine, not per JVM.
     */
   private[queries] def cachedJaccard(s: SparkSession, d: String): DataFrame =
-    jMemo(s, d) {
-      graft.ArtifactStore.frames(s, "jaccard",
-        graft.ArtifactStore.tableKey(s, d, "documents", "jaccard-v1"),
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, "pairs") {
-        tmp => Dedup.jaccardPairs(cachedShingles(s, d))
-          .write.parquet(s"$tmp/pairs")
-      }.head
-    }
+    graft.ArtifactStore.tableFrames(s, d, "documents", "jaccard",
+      "jaccard-v1", org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+      "pairs") { tmp =>
+      Dedup.jaccardPairs(cachedShingles(s, d)).write.parquet(s"$tmp/pairs")
+    }.head
 
   /** Candidate-pair indexes, store-hosted like the Jaccard frame: an LSH /
     * SimHash index is a build-once-query-many artifact (signatures +
@@ -65,17 +60,11 @@ object DedupQueries extends QueryModule {
     * SimilarityQueries). Queries against them stay cheap and the
     * signature build cost is paid exactly once.
     */
-  private val candMemo = new SessionMemo[(String, String), DataFrame](Seq(_))
-
   private def cachedCandidates(s: SparkSession, d: String, kind: String)
       (build: => DataFrame): DataFrame =
-    candMemo(s, (d, kind)) {
-      graft.ArtifactStore.frames(s, s"cand-$kind",
-        graft.ArtifactStore.tableKey(s, d, "documents", s"cand-$kind-v1"),
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, "pairs") {
-        tmp => build.write.parquet(s"$tmp/pairs")
-      }.head
-    }
+    graft.ArtifactStore.tableFrames(s, d, "documents", s"cand-$kind",
+      s"cand-$kind-v1", org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+      "pairs")(tmp => build.write.parquet(s"$tmp/pairs")).head
 
   /** Connected components of the J>=0.5 near-dup graph, shared by the
     * census (dd8) and the transitive materialization (dd9). The result

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.MemoRegistry.SessionMemo
 import graft.Tables
+import graft.operators.WindowIndex
 
 /** Text analysis over the `documents` table — the training-data-pipeline
   * operator set: tokenization, language-ID, quality scoring, document
@@ -556,8 +557,11 @@ object TextQueries extends QueryModule {
     // criterion is distinct docs), matching the oracle's HAVING
     // count(DISTINCT doc_id) >= 2 replay bit-for-bit.
     "x18_dup_spans" -> ((s, d) => {
-      val per = docStats(s, d).filter(col("n_win") > 0)
-        .join(dupCounts(s, d), Seq("doc_id"), "left")
+      val idx = windowIndexArtifact(s, d)
+      val per = WindowIndex.cached(s, idx, WindowIndex.DocStats)
+        .filter(col("n_win") > 0)
+        .join(WindowIndex.cached(s, idx, WindowIndex.DupCounts),
+          Seq("doc_id"), "left")
         .select(col("doc_id"), col("lang"), col("n_win"),
           coalesce(col("n_dup"), lit(0L)).as("n_dup"))
       per.groupBy(col("lang"))
@@ -631,7 +635,7 @@ object TextQueries extends QueryModule {
     // table, one narrow row per dup-affected doc. Integer-exact; the
     // oracle still replays the full island derivation in SQL.
     "x20_dup_runs" -> ((s, d) => {
-      spanStats(s, d)
+      WindowIndex.cached(s, windowIndexArtifact(s, d), WindowIndex.Spans)
         .select(col("doc_id"), col("lang"), col("longest_run"),
           col("n_runs"))
         .orderBy(col("longest_run").desc, col("doc_id"))
@@ -657,7 +661,7 @@ object TextQueries extends QueryModule {
     // construction, exactly the old countDistinct(a.h) over the
     // equi-join. Integer counts, top-15 pairs.
     "x21_cross_source_spans" -> ((s, d) => {
-      win5(s, d)
+      WindowIndex.cached(s, windowIndexArtifact(s, d), WindowIndex.Windows)
         .groupBy(col("h"))
         .agg(sort_array(collect_set(col("source"))).as("ss"))
         .filter(size(col("ss")) >= 2)
@@ -689,11 +693,12 @@ object TextQueries extends QueryModule {
       // spans) where it used to sort the corpus-scale dup-window
       // stream per session. Same integers; the oracle replays the full
       // span derivation in SQL.
-      val perDoc = spanStats(s, d)
+      val idx = windowIndexArtifact(s, d)
+      val perDoc = WindowIndex.cached(s, idx, WindowIndex.Spans)
         .select(col("doc_id"), col("removed_words"))
       // word totals off the index's narrow docstats table (round 14) —
       // this leg used to re-split the ENTIRE corpus text per run
-      val docs = docStats(s, d)
+      val docs = WindowIndex.cached(s, idx, WindowIndex.DocStats)
         .select(col("doc_id"), col("lang"),
           col("n_words").as("total_words"))
       docs.join(perDoc, Seq("doc_id"), "left")
@@ -735,13 +740,14 @@ object TextQueries extends QueryModule {
     // The containment score for (a → b) is
     // |rare windows of a shared with b| / |rare windows of a|,
     // integer-cross-multiplied for the ≥ 90% flag. Consumes the shared
-    // [[win5]] index — the fourth reader of one session-built artifact.
+    // window index's windows and df census.
     // df = 1 windows can't pair but DO count in a's denominator:
     // unique content dilutes containment, exactly the intent.
     "x23_containment" -> ((s, d) => {
-      val hd = win5(s, d)
+      val idx = windowIndexArtifact(s, d)
+      val hd = WindowIndex.cached(s, idx, WindowIndex.Windows)
         .select(col("h"), col("doc_id"), col("lang")).distinct()
-      val hdf = dfCensus(s, d)
+      val hdf = WindowIndex.cached(s, idx, WindowIndex.Df)
       val dist = hdf.groupBy(col("df")).agg(count(lit(1)).as("cnt"))
       val wcum = org.apache.spark.sql.expressions.Window
         .orderBy(col("df")).rowsBetween(
@@ -786,25 +792,18 @@ object TextQueries extends QueryModule {
     // contract by construction).
     "x24_window_index_lifecycle" -> ((s, d) => {
       val path = windowIndexArtifact(s, d)
-      // the MEMOIZED read frames (win5 = readWindows persisted,
-      // dupHashes = readDup persisted): identical rows, and the session
-      // pins the census-merge result once — x20/x22's move to the
-      // spans table (round 15) removed the other consumers that used
-      // to materialize these blocks before x24 ran, which showed up as
-      // a 1.8x warm regression on this query re-merging the census per
-      // execution
-      val wins = win5(s, d)
-      val dup = dupHashes(s, d)
+      val wins = WindowIndex.cached(s, path, WindowIndex.Windows)
+      val dup = WindowIndex.cached(s, path, WindowIndex.Dup)
         .withColumn("is_dup", lit(1))
       val per = wins.join(dup, Seq("h"), "left")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_windows"),
           count(col("is_dup")).as("n_dup_windows"),
           countDistinct(col("doc_id")).as("n_docs_win"))
-      val audit = graft.operators.WindowIndex.readManifest(s, path)
+      val audit = WindowIndex.readManifest(s, path)
         .agg(count(lit(1)).as("n_docs_indexed"))
         .withColumn("n_batches",
-          lit(graft.operators.WindowIndex.batchCount(s, path)))
+          lit(WindowIndex.batchCount(s, path)))
       per.crossJoin(broadcast(audit)).orderBy(col("lang"))
     })
   )
@@ -832,165 +831,23 @@ object TextQueries extends QueryModule {
   private val Wx24Recipe = "x24-v5-mod3split"
 
   // readers open the index by path, so the dir itself is the value: a
-  // published dir costs two `exists` checks and an owner check
-  private def windowIndexArtifact(s: org.apache.spark.sql.SparkSession,
+  // published dir costs two `exists` checks and an owner check. Every
+  // window-index reader (x18, x20–x24) ensures it, so whichever runs
+  // first elects the one builder and every later reader rides the same
+  // files instead of re-exploding the corpus text.
+  private[graft] def windowIndexArtifact(
+      s: org.apache.spark.sql.SparkSession,
       d: String): String =
     graft.ArtifactStore.ensure(s, "x24-winidx",
       graft.ArtifactStore.tableKey(s, d, "documents", Wx24Recipe)) { dir =>
       val docs = Tables.documents(s, d)
       val idx = s"$dir/idx"
       val delta = docs.filter(col("doc_id") % 3 === 0)
-      graft.operators.WindowIndex.write(
-        docs.filter(col("doc_id") % 3 =!= 0), idx)
-      graft.operators.WindowIndex.append(delta, idx)
+      WindowIndex.write(docs.filter(col("doc_id") % 3 =!= 0), idx)
+      WindowIndex.append(delta, idx)
       // the retry path, exercised IN the gate: identical re-append
-      graft.operators.WindowIndex.append(delta, idx)
+      WindowIndex.append(delta, idx)
     } + "/idx"
-
-  /** Word-5-gram window frame, read by x21/x23/x24 (since round 15
-    * x18 answers from docstats+dupc and x20/x22 from the spans table —
-    * only the queries that need per-POSITION or per-hash detail still
-    * touch window-scale rows): one row per window position `g`
-    * (1-based) per document, `h` = md5 of the space-joined window. The
-    * explode is ~|tokens| rows — linear, the same mass every
-    * substring-dedup pipeline streams (Lee et al. 2022). This IS the
-    * production posture (VERDICT r12 #3): the window index is written
-    * ONCE next to the corpus — the [[graft.operators.WindowIndex]]
-    * snapshot-pointer artifact whose full lifecycle x24 runs under the
-    * oracle — and every window-scale pass READS it; the session memo
-    * only pins the read frame in block storage so repeated passes
-    * don't re-scan parquet.
-    * Serialized blocks (MEMORY_AND_DISK_SER): the frame is
-    * corpus-sized and narrow — the checkpointLarge storage-level
-    * rationale applies.
-    */
-  private val win5Memo =
-    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
-
-  private def win5(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    win5Memo(s, d) {
-      // The PERSISTED index is the source (VERDICT r12 #3): every
-      // window-scale reader (x21/x23/x24) reads the committed
-      // windows of the x24 artifact — ensured here, so whichever
-      // consumer runs first elects one builder and every later reader
-      // (including x24 itself) rides the same files. The x24 oracle +
-      // WindowIndexSpec pin the stored frame ≡ windows(documents)
-      // row-for-row, so nothing changes downstream; what disappears is
-      // the session-local re-explode of the corpus text.
-      graft.operators.WindowIndex
-        .readWindows(s, windowIndexArtifact(s, d))
-        .persist(org.apache.spark.storage.StorageLevel
-          .MEMORY_AND_DISK_SER)
-    }
-
-  /** Hashes occurring in ≥2 DISTINCT docs (within-doc repeats can't
-    * self-flag) — the family's dup criterion; since round 15 x24 is
-    * the remaining in-query consumer (x18/x20/x22 read the per-doc
-    * docstats/dupc/spans tables the index maintains with this same
-    * criterion at append time). "≥2 distinct docs" is computed as
-    * min(doc_id) ≠ max(doc_id), NOT countDistinct: the distinct
-    * formulation plans as an extra full-corpus (h, doc_id) exchange
-    * before the per-h aggregate, while min/max is ONE
-    * map-side-combinable aggregate — measured 1.54× on the whole x18
-    * pipeline and 1.29× on x22 at the 100× stretch back when both
-    * joined this frame (26M windows, every one duplicated). Same rows
-    * by construction; the DuckDB oracles keep HAVING count(DISTINCT
-    * doc_id) >= 2 and stay hash-exact. Memoized like [[win5]]: the
-    * census-merge read runs ONCE per session and the persisted
-    * minority set broadcasts where it fits.
-    */
-  private val dupHashMemo =
-    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
-
-  private def dupHashes(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    dupHashMemo(s, d) {
-      // From the artifact's COMMITTED census (VERDICT r12 #3):
-      // readDup merges the ≤ k stored per-batch delta files — a few
-      // post-aggregate rows per hash — where dupHashesOf(win5) re-ran
-      // the corpus-scale census groupBy once per session. Same rows:
-      // the x24 oracle pins the incremental min/max merge ≡ the
-      // one-shot HAVING count(DISTINCT doc_id) >= 2 census.
-      graft.operators.WindowIndex
-        .readDup(s, windowIndexArtifact(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** Per-doc stats off the artifact's docstats dirs (doc_id, lang,
-    * n_win, n_words) — ONE narrow row per doc, no window-scale scan.
-    * x18's denominator/doc census and x22's word totals (which used to
-    * re-tokenize the whole corpus text) both read this.
-    */
-  private val docStatsMemo =
-    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
-
-  private def docStats(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    docStatsMemo(s, d) {
-      graft.operators.WindowIndex
-        .readDocStats(s, windowIndexArtifact(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** Per-doc GLOBAL dup-window counts off the artifact's summable dupc
-    * deltas (VERDICT r13 #2): the window-scale win5 ⋈ dupHashes join
-    * x18 used to run per session collapses to a read of ≤|batches|
-    * narrow per-doc dirs merged by sum — exact, because every append
-    * that flipped a hash emitted its retroactive correction at commit
-    * time (dup status is monotone).
-    */
-  private val dupCountMemo =
-    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
-
-  private def dupCounts(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    dupCountMemo(s, d) {
-      graft.operators.WindowIndex
-        .readDupCounts(s, windowIndexArtifact(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** Per-doc SPAN stats off the artifact's spans deltas (VERDICT r14
-    * #3): (doc_id, lang, longest_run, n_runs, removed_words), one
-    * narrow row per dup-affected doc, maintained per-append by
-    * recomputing only flip-affected docs' islands. x20 and x22 read
-    * THIS — the last window-scale per-session join in the dup-span
-    * family (win5 ⋈ dupHashes + the per-doc window sort) collapses to
-    * a read of ≤|batches| narrow dirs merged by max-seq.
-    * WindowIndexSpec pins incremental ≡ one-shot ≡ brute recompute.
-    */
-  private val spanStatsMemo =
-    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
-
-  private def spanStats(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    spanStatsMemo(s, d) {
-      graft.operators.WindowIndex
-        .readSpans(s, windowIndexArtifact(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** Per-hash global doc-frequency census (h, df) — x23's rare-window
-    * frame, read from the artifact's committed v3 census (VERDICT r12
-    * #3 extended): the stored per-batch deltas carry each hash's
-    * within-batch distinct-doc count, and because a doc is admitted to
-    * exactly one batch they merge BY SUM — so the corpus-scale
-    * distinct+aggregate this memo used to run per session becomes a
-    * read of ≤ k narrow post-agg dirs. The calibrated-cap redesign
-    * consumes the frame three times per execution; memo+persist keeps
-    * that one read.
-    */
-  private val dfCensusMemo =
-    new SessionMemo[String, org.apache.spark.sql.DataFrame](Seq(_))
-
-  private def dfCensus(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    dfCensusMemo(s, d) {
-      graft.operators.WindowIndex
-        .readDf(s, windowIndexArtifact(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
 
   /** The x16 per-doc DSIR importance frame (doc_id, lang, n_feats,
     * w_num, w_den, w) over the FULL corpus — factored out so

@@ -51,20 +51,22 @@ object SourceAdapter {
     ToxvaldbAdapter, Tox21Adapter, ToxcastAdapter, ReachAdapter,
     PubchemAdapter, SiderAdapter)
 
-  /** Session-scoped memo of staged triplets, localCheckpoint-ed — same
-    * policy (and same rationale) as Harmonize.cachedBrick. The composite
-    * stagings (LineitemAdapter, IceAdapter, …) run full multi-window
-    * pipelines; the end-to-end queries (h7-h11) and the brick build each
-    * need the same deterministic output, so it is computed once per
-    * (session, sfDir, adapter) and shared. Keyed by adapter name —
-    * adapters are stateless objects, so name identifies the computation.
+  /** Session-scoped memo of staged triplets. The composite stagings
+    * (LineitemAdapter, IceAdapter, …) run full multi-window pipelines;
+    * the end-to-end queries (h7-h11) and the brick build each need the
+    * same deterministic output, so it is computed once per (session,
+    * sfDir, adapter) and shared. Keyed by adapter name — adapters are
+    * stateless objects, so name identifies the computation.
     *
-    * Checkpoint, not persist: the brick's assembly plan references every
-    * staging FOUR times (activities union, sid map, pid map, inchi map),
-    * so un-truncated staging lineages multiply into a plan Catalyst
-    * spends a DATA-INDEPENDENT ~60-80 s analyzing (measured via
-    * BrickProfile: 'brick.checkpoint' 82 s at sf0.01 vs 59 s at sf0.1 —
-    * pure planning). With staged leaves the same step is seconds.
+    * A hosted staging is a parquet read-back of its store dir; an input
+    * over the hosting size gate is localCheckpoint-ed instead. Either
+    * way the triplet's leaves are materialized, never the staging
+    * lineage: the brick's assembly plan references every staging FOUR
+    * times (activities union, sid map, pid map, inchi map), so
+    * un-truncated lineages multiply into a plan Catalyst spends a
+    * DATA-INDEPENDENT ~60-80 s analyzing (measured via BrickProfile:
+    * 'brick.checkpoint' 82 s at sf0.01 vs 59 s at sf0.1 — pure
+    * planning). With materialized leaves the same step is seconds.
     */
   private val memo = new SessionMemo[
     (String, String), StagingTriplet](t =>
@@ -91,8 +93,7 @@ object SourceAdapter {
         // instead). Serialized blocks on the read-backs: 14 resident
         // triplets are the biggest storage tenant in a macro run, and
         // their footprint is what starves the downstream assembly's
-        // execution memory. (Parquet leaves also keep the brick's
-        // analysis cheap — the checkpoint-vs-lineage note above holds.)
+        // execution memory.
         val Seq(subs, props, acts) = graft.ArtifactStore.frames(spark,
           s"staging-${a.name}",
           graft.ArtifactStore.dirKey(spark, sfDir, s"staging-v1-${a.name}"),

@@ -114,10 +114,15 @@ class ArtifactReuseSpec extends SparkSpec {
     spark.conf.set(ArtifactStore.DirKey, base)
     try {
       MemoRegistry.evictAll(spark)
+      // ann12 runs before ann5: from an empty store its residual
+      // codebook build reads the IVF assignment through the same store
+      // memo, so the assignment's build nests inside the codebook's
       val queries = Seq("dd2_ngram_jaccard", "dd3_minhash_lsh",
-        "x24_window_index_lifecycle", "ann5_ivf_topk")
+        "x24_window_index_lifecycle", "ann12_residual_pq", "ann5_ivf_topk")
       def run(): Seq[Seq[String]] =
         queries.map(q => sortedRows(SparkEntry.queries(q)(spark, sf())))
+      def persisted() = spark.sparkContext.getPersistentRDDs.toMap
+      val before = persisted().keySet
       val rows1 = run()
       val dirs1 = artifactDirs(base)
       def dir(prefix: String): String = {
@@ -127,6 +132,25 @@ class ArtifactReuseSpec extends SparkSpec {
       }
       val docDirs = Seq("jaccard-", "cand-minhash-", "x24-winidx-").map(dir)
       dir("ivf-assigned-")
+      dir("respq-")
+      // the frames the first run holds, by storage level: shingles,
+      // Jaccard and candidate pairs, the dup census, the IVF assignment
+      // and the centroids deserialized; the windows and the residual
+      // codebooks and codes serialized. Recorded from the same run at
+      // commit 1653575, when each read had its own memo in the query
+      // modules.
+      val n1 = persisted()
+      val levels = (n1 -- before).values.toSeq.map(_.getStorageLevel)
+        .groupBy(identity).view.mapValues(_.size).toMap
+      assert(levels == Map(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK -> 6,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER -> 3),
+        levels)
+      // a second run in the session is served by the memos: no store
+      // dir and, as at 1653575, no persisted RDD is added
+      assert(run() == rows1)
+      assert(artifactDirs(base) == dirs1, "warm rerun wrote store dirs")
+      assert(persisted().size == n1.size)
       // a content key ends in the table fingerprint <xor>-<sum>-<count>:
       // every artifact over `documents` must carry the same one
       val fingerprints = docDirs.map(_.split('-').takeRight(3).toSeq)

@@ -1,12 +1,14 @@
 package graft
 
 import graft.harmonize.Harmonize
-import graft.operators.ProductQuantIndex
+import graft.operators.{ProductQuantIndex, WindowIndex}
+import graft.queries.TextQueries
 import graft.sources.{EventsAdapter, SourceAdapter}
 
 /** MemoRegistry eviction: a long-lived session can release every
-  * session-scoped memoized frame (brick checkpoints, staged triplets,
-  * shingle/candidate/centroid caches) and rebuild bit-identically —
+  * session-scoped memoized frame (the brick's bucketed tables, staged
+  * triplets, table-keyed store read-backs such as the PQ codes, window
+  * index tables, shingle/centroid caches) and rebuild bit-identically —
   * content-addressed ids make eviction invisible to results.
   */
 class MemoEvictionSpec extends SparkSpec {
@@ -43,12 +45,14 @@ class MemoEvictionSpec extends SparkSpec {
     val d = sf()
     Harmonize.cachedBrick(spark, d, SourceAdapter.all).activities.count()
     val other = spark.newSession()
-    // the brick, a staged triplet and the PQ artifact: three memos with
-    // different keys and frame shapes
+    // the brick, a staged triplet, the PQ artifact and a window-index
+    // table: four memos with different keys and frame shapes
+    val winIdx = TextQueries.windowIndexArtifact(spark, d)
     def memoized() = (
       Harmonize.cachedBrick(spark, d, SourceAdapter.all).activities,
       SourceAdapter.cachedStaging(EventsAdapter, spark, d).activities,
-      ProductQuantIndex.cached(spark, d)._2)
+      ProductQuantIndex.cached(spark, d)._2,
+      WindowIndex.cached(spark, winIdx, WindowIndex.Windows))
     // evicting through a DIFFERENT session must not drop this one's
     // memos: each frame is still served from storage (same object
     // identity), whether the other session evicts one memo or all
@@ -60,12 +64,14 @@ class MemoEvictionSpec extends SparkSpec {
     assert(before._1 eq after._1)
     assert(before._2 eq after._2)
     assert(before._3 eq after._3)
+    assert(before._4 eq after._4)
     // evicting THIS session drops them: the next access builds anew
     MemoRegistry.evictAll(spark)
     val rebuilt = memoized()
     assert(rebuilt._1 ne before._1)
     assert(rebuilt._2 ne before._2)
     assert(rebuilt._3 ne before._3)
+    assert(rebuilt._4 ne before._4)
     MemoRegistry.evictAll(spark)
   }
 }

@@ -7,6 +7,7 @@ three commits).
 Usage:
     sbt -batch test 2>&1 | tee /tmp/sbt_test.log
     python3 tools/sync_counts.py /tmp/sbt_test.log
+    python3 tools/sync_counts.py --census    # source census only
 
 Parses the final ScalaTest run summary
 (`Tests: succeeded N, ...` + `Suites: completed M, aborted 0`) and
@@ -17,9 +18,43 @@ Also syncs the QUERY count in NOTES.md from the single source of
 truth, `SparkEntry.expectedQueryCount` (round-8 finding: the spec
 counts were script-synced but the query count drifted 187 vs 189 when
 the last snapshot outran the docs).
+
+Both modes also print a census of `src/main`, so docs can quote a
+command instead of a hand count: the session memos (`new SessionMemo`
+sites), in total and under `queries/`, and the distinct
+`"spark.graft.*"` conf keys.
 """
+import os
 import re
 import sys
+
+MAIN = "src/main/scala"
+
+
+def census():
+    """(memos, memos under queries/, distinct spark.graft.* keys)."""
+    memos = queries = 0
+    keys = set()
+    for root, _, files in os.walk(MAIN):
+        for f in files:
+            if not f.endswith(".scala"):
+                continue
+            src = open(os.path.join(root, f), encoding="utf-8").read()
+            n = src.count("new SessionMemo")
+            memos += n
+            if os.path.basename(root) == "queries":
+                queries += n
+            keys.update(re.findall(r'"(spark\.graft\.[A-Za-z0-9_.]+)"', src))
+    return memos, queries, sorted(keys)
+
+
+def print_census():
+    memos, queries, keys = census()
+    print(f"census: {memos} session memos in src/main "
+          f"({queries} under queries/), "
+          f"{len(keys)} spark.graft.* keys")
+    for k in keys:
+        print(f"  {k}")
 
 
 def query_count():
@@ -34,6 +69,9 @@ def query_count():
 def main():
     if len(sys.argv) != 2:
         raise SystemExit(__doc__.strip())
+    if sys.argv[1] == "--census":
+        print_census()
+        return
     log = open(sys.argv[1], encoding="utf-8", errors="replace").read()
     m_t = re.findall(r"Tests: succeeded (\d+), failed (\d+)", log)
     m_s = re.findall(r"Suites: completed (\d+), aborted (\d+)", log)
@@ -69,6 +107,7 @@ def main():
                              f"matching {pat.pattern!r}, found {n}")
         open(path, "w", encoding="utf-8").write(new)
         print(f"{path}: synced to {succeeded} specs / {suites} suites")
+    print_census()
 
 
 if __name__ == "__main__":
